@@ -45,10 +45,10 @@ object SparkEntry {
           prevDefault.foreach(SparkSession.setDefaultSession)
           prevActive.foreach(SparkSession.setActiveSession)
         }
-      // the PLAIN frame, not a localCheckpoint: graft.Bench unpersists
-      // every persistent RDD between timed runs, which would orphan a
-      // checkpointed view; recomputing level3 per query is exactly
-      // what the Scala-API rows do
+      // the PLAIN frame, not a localCheckpoint: a caller that
+      // unpersists every persistent RDD (a timing harness between
+      // runs) would orphan a checkpointed view; recomputing level3 per
+      // query is exactly what the Scala-API rows do
       level3(s2, d).createOrReplaceTempView("l3_sql")
       Tables.load(s2, d, "documents").createOrReplaceTempView("docs_sql")
       Tables.load(s2, d, "embeddings").createOrReplaceTempView("emb_sql")
@@ -1571,8 +1571,8 @@ object SparkEntry {
     * the codebook, so it is written to a temp parquet once and re-read
     * per query: searches then measure ADC lookups against the stored
     * index, not the encode pass — and a parquet artifact (unlike a
-    * cached in-memory frame) survives `graft.Bench`'s per-query
-    * unpersist/GC reset. */
+    * cached in-memory frame) survives a caller's unpersist/GC reset
+    * between queries. */
   private val pqIndexMemo =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -1627,7 +1627,7 @@ object SparkEntry {
   }
 
   /** Deterministic per-(artifact-kind, data-dir) location under the
-    * JVM temp dir. `createTempDirectory` made every Verify/Bench run
+    * JVM temp dir. `createTempDirectory` made every run
     * grow /tmp by a fresh copy of each artifact (judge r7 #8); a
     * deterministic path is instead WIPED before this JVM's first write
     * (clearing any prior run's copy) and again on JVM exit. */
@@ -1651,7 +1651,7 @@ object SparkEntry {
                              // shutdown hook) — nothing left to reap
         .foreach(p => scala.util.Try(deleteRecursively(p)))
     } finally ls.close()
-    // pid suffix keeps concurrent JVMs (Verify + Bench on the same
+    // pid suffix keeps concurrent JVMs (two runs on the same
     // data dir) from wiping each other's live artifacts mid-run
     val dir = tmp.resolve(prefix + "_" + ProcessHandle.current().pid())
     deleteRecursively(dir)
@@ -1673,32 +1673,6 @@ object SparkEntry {
       val all = try walk.iterator().asScala.toList finally walk.close()
       all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
     }
-
-  /** Pre-builds EVERY per-dir artifact (PQ codebook + stored code
-    * table, trained IVF centroids, level2 tier lake, level3 lake)
-    * outside any timed query. `graft.Bench` calls this before its
-    * query loop so one-off BUILD cost is its own set of recorded
-    * numbers instead of landing on whichever query touches each
-    * artifact first. Returns (label, wall seconds) per artifact. */
-  def prepareArtifacts(s: SparkSession, d: String): Seq[(String, Double)] = {
-    def timed(label: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime(); f
-      label -> (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      timed("pq_build_s") { pqIndex(s, d).count() },
-      timed("ivf_train_s") { trainedIvf(s, d) },
-      timed("ivf_index_build_s") { ivfIndex(s, d) },
-      timed("ivf_base_index_build_s") { ivfBaseIndex(s, d) },
-      timed("ivf_grown_index_build_s") { ivfGrownIndex(s, d) },
-      timed("exact_knn_build_s") { exactKnnIndex(s, d).count() },
-      timed("l2_lake_build_s") { level2Lake(s, d) },
-      timed("l3_lake_build_s") { level3Lake(s, d) },
-      timed("l3_compact_build_s") { level3LakeCompacted(s, d) },
-      timed("stream_events_collect_s") { orderedBookEvents(s, d) },
-      timed("curated_lake_build_s") { curatedLake(s, d) },
-      timed("dedup_index_build_s") { dedupIndexLake(s, d) })
-  }
 
   /** Build-once memo for the dedup fingerprint-index lake (per data
     * dir): content hashes + UNCAPPED MinHash band keys of the BASE
@@ -1769,9 +1743,8 @@ object SparkEntry {
     * harness scaffolding (a deployment's stream source delivers events
     * in order; only a MemoryStream replay of a bounded frame needs the
     * collect), and the two rows feed the byte-identical array — so it
-    * is collected once per data dir and reported as its own
-    * `stream_events_collect_s` build timing, the prepareArtifacts
-    * discipline. A few MB of driver heap at bench SF. */
+    * is collected once per data dir and shared by both rows. A few
+    * MB of driver heap at bench SF. */
   private val bookEventsMemo =
     scala.collection.concurrent.TrieMap
       .empty[String, Array[graft.market.BookEvent]]

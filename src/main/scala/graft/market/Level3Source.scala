@@ -70,10 +70,11 @@ object Level3Source {
     *     never crosses an incarnation, so the carries stay exact.
     * Two chained WindowExecs over the SAME (user_id; ts, event_id)
     * spec — Catalyst plans ONE Exchange + ONE Sort for both (plan
-    * audit in plans/r17/mkt_level3_*.txt; rows proven identical to
-    * the three-shuffle build by the full oracle gate and
-    * Level3ShapeProbe's exceptAll parity). At 100 TB the build
-    * shuffles the log once instead of three times. */
+    * audit in plans/r17/mkt_level3_*.txt; rows equal the
+    * three-shuffle build on the sf0.001 fixture by ShapeParitySpec's
+    * exceptAll both ways, and the mkt_level3 oracle row matches the
+    * DuckDB mirror in the gate runs of docs/verify/gate_log.txt). At
+    * 100 TB the build shuffles the log once instead of three times. */
   def level3(events: DataFrame): DataFrame = {
     val base = events.select(
       col("event_id"),
@@ -230,9 +231,11 @@ object Level3Source {
     // a carry always starts a price chain (first row ⇒ price_chg = 1),
     // "the chain containing the carry" ≡ "the chain whose start row IS
     // the carry" — one more running carry of the start row's `carry`
-    // flag. Rows proven identical to the three-window shape by
-    // ShapeParitySpec (exceptAll both ways on newRows AND corrections)
-    // and the mkt_level3_incr oracle row at both gate SFs.
+    // flag. Rows equal the three-window shape on the sf0.001 fixture
+    // at the snapshot cut (ShapeParitySpec: exceptAll both ways on
+    // newRows AND corrections); the mkt_level3_incr oracle row shows
+    // only that the assembled incremental build equals the full one
+    // (DuckDB mirror, sf0.001 gate run in docs/verify/gate_log.txt).
     val wUser = Window.partitionBy("user_id")
       .orderBy("microtimestamp", "event_id")
     val run = wUser.rowsBetween(Window.unboundedPreceding, 0)

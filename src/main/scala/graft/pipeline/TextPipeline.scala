@@ -1457,11 +1457,12 @@ object TextPipeline {
     // evaluated the gram subtree twice and shuffled it twice (once
     // into the partial-agg exchange, once into the SMJ probe); the
     // window shape hashes the grams once and shuffles them once —
-    // measured 4.98 s → 2.71 s at sf0.1 (CharShapeProbe, exceptAll
-    // parity 0). Same flag condition, identical spans. Skew note: a
-    // viral gram makes one window partition hot exactly as it made
-    // one SMJ key hot — the 128-bit content key bounds both the same
-    // way (no key is hotter than its true duplicate count).
+    // measured 4.98 s → 2.71 s at sf0.1 (stage-isolated, exceptAll
+    // parity 0; OPTIMIZATION_r17.md). Same flag condition, identical
+    // spans. Skew note: a viral gram makes one window partition hot
+    // exactly as it made one SMJ key hot — the 128-bit content key
+    // bounds both the same way (no key is hotter than its true
+    // duplicate count).
     val flagged = charGrams(docs, L)
       .withColumn("cnt",
         count(lit(1)).over(Window.partitionBy("h1", "h2")))
@@ -1522,15 +1523,15 @@ object TextPipeline {
     * window) is re-keyed to 128 bits of xxhash64 long pairs over the
     * selected gram's hash:
     * the cheapest key form in the family (long-pair keys cut the
-    * exact pass ~2.3× — CsdProbe; WinnowProbe carries this screen's
-    * own A/B), with the no-false-flag guarantee intact (equality
-    * classes of md5 and of the xxhash64 pair coincide up to 2⁻¹²⁹
-    * collisions). Output: (doc_id, n_selected, n_dup_selected,
+    * exact pass ~2.3× in a standalone A/B; PLANS.md records it),
+    * with the no-false-flag guarantee intact (equality classes of md5
+    * and of the xxhash64 pair coincide up to 2⁻¹²⁹ collisions).
+    * Output: (doc_id, n_selected, n_dup_selected,
     * is_flagged) per document. */
   def charDupDocsWinnowed(docs: DataFrame, L: Int = 24,
       w: Int = 8): DataFrame = {
-    // r17 shape changes (CharShapeProbe, exceptAll parity 0; 9.1 s →
-    // 3.2 s at sf0.1 standalone):
+    // r17 shape changes (exceptAll parity 0 against the previous
+    // shape; 9.1 s → 3.2 s at sf0.1 standalone, OPTIMIZATION_r17.md):
     //   - the selection hash rides as BINARY(16) via unhex(md5):
     //     lowercase hex is byte-order-isomorphic to its bytes, so the
     //     rightmost-min struct ordering — the cross-engine contract —
@@ -1609,7 +1610,7 @@ object TextPipeline {
     // gram input past the checkpoint, and an un-checkpointed screen
     // subtree would ride into that recompute. LAZY, not eager: an
     // eager checkpoint serializes the screen ahead of the whole DAG,
-    // and an interleaved A/B (ScopedProbe) measured that ~15% slower
+    // and an interleaved A/B measured that ~15% slower
     // end-to-end than letting the first action materialize the
     // cached ID blocks.
     val screen = charDupDocsWinnowed(docs, L, w)

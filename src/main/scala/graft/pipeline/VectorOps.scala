@@ -717,8 +717,7 @@ object VectorOps {
   /** IVF-Flat under a k-means-TRAINED coarse quantizer: same search,
     * better cells — trained centroids move to the data's modes, so at
     * EQUAL probe cost (same nCells/nProbe) the probed cells hold more
-    * of each query's true neighbors (recall sweep in
-    * `VecScaleProbe` / PLANS.md). */
+    * of each query's true neighbors (recall sweep in PLANS.md). */
   def annIvfKmeans(emb: DataFrame, nQueries: Int = 5, k: Int = 5,
       nCells: Int = 16, nProbe: Int = 2, iters: Int = 2,
       trainedCents: Option[Array[Array[Long]]] = None): DataFrame =
@@ -1065,7 +1064,7 @@ object VectorOps {
     // prune the vector arrays BEFORE the ranking windows: cos is
     // computed at the pair join, but letting qa/qb (d longs each) ride
     // the two top-k shuffles multiplied the self-graph's shuffle bytes
-    // ~14× at the 32k probe (VecScaleProbe)
+    // ~14× at a 32k-vector input
     val scored = q.join(assign, Seq("cent_id", "sub"))
       .filter(col("query_id") =!= col("vb"))
       .withColumn("cos", cosine)
@@ -1231,9 +1230,8 @@ object VectorOps {
     * ground truth [[knnRecall]] grades against. O(n²) by definition:
     * an offline eval artifact (build it once at eval SF, persist it,
     * pass it back via `exactBaseline`), never a production-path
-    * operator — the deployment shape `graft.Bench` measures builds it
-    * in `prepareArtifacts` so the timed recall row is the approximate
-    * path plus the grading join. */
+    * operator — the deployment shape builds it once and stores it, so
+    * a recall query is the approximate path plus the grading join. */
   def exactSelfKnn(emb: DataFrame, k: Int = 5): DataFrame = {
     val q = quantized(emb)
     val a = q.select(col("vec_id").as("query_id"), col("q").as("qa"),
@@ -1913,7 +1911,7 @@ object VectorOps {
 
   /** Recall@k of the composed IVF-PQ index against the same baseline.
     * `nProbe` is the recall/latency knob a deployment tunes with
-    * exactly this metric (see `VecScaleProbe`'s sweep). */
+    * exactly this metric (the nProbe sweep in PLANS.md). */
   def annRecallIvfPq(emb: DataFrame, nQueries: Int = 5, k: Int = 5,
       trained: Option[PqModel] = None, nCells: Int = 16,
       nProbe: Int = 2, codes: Option[DataFrame] = None,
@@ -1956,7 +1954,7 @@ object VectorOps {
     // HashPartitioning(va), so per round the edge table is scanned
     // from memory and either broadcast (small n) or sort-merge-joined
     // in place on its preserved partitioning — never recomputed,
-    // never hash-re-Exchanged (GraphProbe prints the round plan:
+    // never hash-re-Exchanged (the round plan shows an
     // InMemoryTableScan with no Exchange above it). Lineage is fixed
     // (edges are computed once), so the checkpoint's
     // lineage-flattening job isn't needed here.
@@ -2013,7 +2011,7 @@ object VectorOps {
     // an explicit repartition pins it (knnGraph's own output
     // partitioning follows the va-side top-k). persist(), not
     // checkpoint, for the same partitioning-amnesia reason as
-    // pageRank's edge list. GraphProbe prints the per-round plan.
+    // pageRank's edge list.
     val edges = knnGraph(emb, k, nCells, trainedCents)
       .select(col("va"), col("vb"))
       .repartition(col("vb"))

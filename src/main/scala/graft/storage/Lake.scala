@@ -66,27 +66,40 @@ object Lake {
       .partitionBy(PartitionCols: _*)
       .mode("overwrite")
       .parquet(tmp)
-    // swap with failure checks: Hadoop rename reports failure by
-    // returning false, not throwing — an unchecked swap that falls
-    // through to the delete would destroy the only remaining copy.
-    // The backup is deleted ONLY after the new data is in place.
-    // Resolve the filesystem FROM THE LAKE PATH, not fs.defaultFS: on a
-    // deployment whose default FS differs from the lake's store (s3a://
-    // lake with HDFS default), FileSystem.get(conf) would probe/rename
-    // on the wrong store after the data was already rewritten.
+    swapIn(spark, tmp, path, ".compact_old")
+  }
+
+  /** Publish the staged directory `staged` at `path`, the one swap
+    * every rewrite in this file uses: move the live copy aside to
+    * `path + backupSuffix`, rename the staged copy in, put the live
+    * copy back if that fails, and delete the backup ONLY after the new
+    * data is in place. Hadoop rename reports failure by returning
+    * false, not throwing — an unchecked swap that fell through to the
+    * delete would destroy the only remaining copy. A backup left by a
+    * swap that crashed between its two renames is the only copy of the
+    * old data, so the swap refuses to start over it. The filesystem is
+    * resolved FROM THE PATH, not fs.defaultFS: on a deployment whose
+    * default FS differs from the lake's store (s3a:// lake with HDFS
+    * default), FileSystem.get(conf) would probe/rename on the wrong
+    * store after the data was already rewritten. `firstPublish` admits
+    * a missing live copy (nothing to move aside or roll back). */
+  private def swapIn(spark: SparkSession, staged: String, path: String,
+      backupSuffix: String, firstPublish: Boolean = false): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(path + ".compact_old")
+    val old = new org.apache.hadoop.fs.Path(path + backupSuffix)
     require(!fs.exists(old),
-      s"$old exists — a prior compaction crashed mid-swap; recover it first")
-    require(fs.rename(p, old), s"could not move $p aside to $old")
-    if (!fs.rename(tmpP, p)) {
-      // roll back: put the original lake back before failing
-      fs.rename(old, p)
-      sys.error(s"could not move compacted data $tmp into place at $p")
+      s"$old exists — a prior swap crashed between its renames; " +
+        "recover it first")
+    val hadPrev = !firstPublish || fs.exists(p)
+    if (hadPrev) require(fs.rename(p, old),
+      s"could not move the live data $p aside to $old")
+    if (!fs.rename(new org.apache.hadoop.fs.Path(staged), p)) {
+      // roll back: put the original back before failing
+      if (hadPrev) fs.rename(old, p)
+      sys.error(s"could not move staged data $staged into place at $p")
     }
-    fs.delete(old, true)
+    if (hadPrev) fs.delete(old, true)
   }
 
   /** Read the lake back (partition columns restored to their types). */
@@ -248,7 +261,7 @@ object Lake {
     // both index halves are staged into ONE directory — the centroid
     // matrix lives at `<path>/_centroids`, which parquet readers of
     // the postings skip (underscore-prefixed paths are hidden) — and
-    // published by the compactIvfIndex swap discipline (ADVICE r16:
+    // published by the [[swapIn]] discipline (ADVICE r16:
     // the previous delete-then-rename opened a window where a
     // concurrent reader saw NO index at `path`): rename the current
     // index aside, rename the staged build in, roll back on failure,
@@ -290,9 +303,8 @@ object Lake {
         "is in progress (or crashed; delete the lock after confirming " +
         "the writer is dead)")
     try withAppendFence(spark, path, "writeIvfIndex") {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val old = new org.apache.hadoop.fs.Path(path + ".rebuild_old")
+      val fs = old.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // fail BEFORE the (expensive) staging write, not after it
       require(!fs.exists(old),
         s"$old exists — a prior rebuild crashed mid-swap; recover it first")
@@ -302,17 +314,7 @@ object Lake {
         .sortWithinPartitions("cent_id", "vb")
         .write.mode("overwrite").parquet(tmp)
       writeIvfCentroids(spark, cents, tmp)
-      val tmpP = new org.apache.hadoop.fs.Path(tmp)
-      val hadPrev = fs.exists(p)
-      if (hadPrev) require(fs.rename(p, old),
-        s"could not move the live index $p aside to $old")
-      if (!fs.rename(tmpP, p)) {
-        // roll back: put the original index back before failing
-        if (hadPrev) fs.rename(old, p)
-        sys.error(s"could not publish the built index $tmp at $p")
-      }
-      if (hadPrev) fs.delete(old, true)
-      ()
+      swapIn(spark, tmp, path, ".rebuild_old", firstPublish = true)
     } finally {
       lockFs.delete(lockP, false)
       ()
@@ -499,8 +501,9 @@ object Lake {
     * row-group skip touches one small file PER BATCH — this rewrite
     * restores one-file-per-cell-cluster clustering (content
     * byte-identical; readers unchanged). Same crash-safe
-    * move-aside/swap/rollback protocol as [[compactLevel3]], same
-    * maintenance cadence as the MinHash index compaction.
+    * move-aside/swap/rollback protocol ([[swapIn]]) as
+    * [[compactLevel3]], same maintenance cadence as the MinHash index
+    * compaction.
     *
     * SINGLE-WRITER WINDOW: the whole run holds the `.compact_lock`
     * file that [[appendIvfIndex]] and
@@ -531,30 +534,19 @@ object Lake {
         .repartition(col("cent_id"))
         .sortWithinPartitions("cent_id", "vb")
         .write.mode("overwrite").parquet(tmp)
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmpP = new org.apache.hadoop.fs.Path(tmp)
       // the rewrite above reads POSTINGS only (parquet skips the
       // underscore-hidden `_centroids` half) — carry the centroid
       // matrix into the compacted directory before the swap, or the
       // multi-probe serving path would lose it
       val cenSrc = new org.apache.hadoop.fs.Path(path + "/_centroids")
+      val fs = cenSrc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(cenSrc)) {
         require(org.apache.hadoop.fs.FileUtil.copy(fs, cenSrc, fs,
           new org.apache.hadoop.fs.Path(tmp + "/_centroids"), false,
           spark.sparkContext.hadoopConfiguration),
           s"could not carry $cenSrc into the compacted index $tmp")
       }
-      val old = new org.apache.hadoop.fs.Path(path + ".compact_old")
-      require(!fs.exists(old),
-        s"$old exists — a prior compaction crashed mid-swap; recover it first")
-      require(fs.rename(p, old), s"could not move $p aside to $old")
-      if (!fs.rename(tmpP, p)) {
-        fs.rename(old, p)
-        sys.error(s"could not move compacted data $tmp into place at $p")
-      }
-      fs.delete(old, true)
-      ()
+      swapIn(spark, tmp, path, ".compact_old")
     } finally {
       // released on every in-process exit (success or exception); only
       // process death leaves it, intentionally fencing the appenders

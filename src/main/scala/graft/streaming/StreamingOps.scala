@@ -576,10 +576,9 @@ object StreamingOps extends Serializable {
     * oracle row (its emissions equal `MarketOps.spread`, so the row is
     * checked against the batch twin's DuckDB mirror). `preOrdered`
     * takes the [[bookEventsOrdered]] array pre-collected as a shared
-    * harness artifact (the `prepareArtifacts` discipline: the
-    * ordered driver-side collect is replay scaffolding a deployment's
-    * real stream source never pays, and the L1/L2 replays feed the
-    * identical array — collect it once, report its build time). */
+    * harness artifact (the ordered driver-side collect is replay
+    * scaffolding a deployment's real stream source never pays, and
+    * the L1/L2 replays feed the identical array — collect it once). */
   def l1Replay(level3: DataFrame, spark: SparkSession,
       nChunks: Int = 3,
       preOrdered: Option[Array[BookEvent]] = None): DataFrame = {
@@ -1210,7 +1209,7 @@ object StreamingOps extends Serializable {
       // unbox ONCE per row: Seq[Long] element access boxes, and the
       // inner loop reads the vector nCells times — O(d) boxed copies
       // here buy O(nCells·d) primitive reads below (measured 3-4×
-      // end-to-end in IngestScaleProbe)
+      // end-to-end on the streaming ANN ingest path)
       val qa = new Array[Long](qv.length)
       var x = 0
       while (x < qa.length) { qa(x) = qv(x); x += 1 }

@@ -18,6 +18,7 @@ skew). The driver's hash is dtype-sensitive; loose `==` cell compare
 (2387.0 == 2387) cannot see this class, so dtype mismatch is a FAIL
 here even when every cell compares equal.
 """
+import contextlib
 import json
 import math
 import os
@@ -46,6 +47,7 @@ LAST_CORRECTNESS = os.path.join(
 
 
 def write_incremental(record):
+    tmp = None
     try:
         d = os.path.dirname(LAST_CORRECTNESS)
         os.makedirs(d, exist_ok=True)
@@ -55,6 +57,12 @@ def write_incremental(record):
         os.replace(tmp, LAST_CORRECTNESS)
     except OSError:
         pass  # read-only checkout must not kill the gate itself
+    finally:
+        # gone after a successful replace; left over if dump or
+        # replace raised
+        if tmp is not None:
+            with contextlib.suppress(OSError):
+                os.unlink(tmp)
 
 
 def norm(df):
@@ -140,6 +148,10 @@ def check_one(con, out_dir, name, sql):
 
 
 def main(out_dir, sf_dir):
+    # clear the previous run's verdicts first: a run that aborts below
+    # (missing testdata, order_id bound) must not leave them standing
+    record = {}
+    write_incremental(record)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -160,8 +172,6 @@ def main(out_dir, sf_dir):
         return 1
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    record = {}
-    write_incremental(record)  # empty-but-present beats absent on crash
     for name, sql in sorted(oracle.items()):
         rows_ok, schema_ok, hash_ok, err, msg = \
             check_one(con, out_dir, name, sql)
