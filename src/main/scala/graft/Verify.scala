@@ -47,7 +47,8 @@ object Verify {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}"); if (sys.env.contains("GRAFT_TRACE")) e.printStackTrace()
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          e.printStackTrace()
         }
       }
     }

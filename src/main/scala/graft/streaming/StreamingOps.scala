@@ -454,45 +454,26 @@ object StreamingOps extends Serializable {
     * through a `MemoryStream`; a deployment reads a real stream
     * source instead and never collects.
     *
-    * The replay's stateful shuffle width: state-store partitions are
-    * fixed at query start from spark.sql.shuffle.partitions, and every
-    * partition pays load/commit per micro-batch even when empty — at a
-    * handful of pair keys that's pure overhead (measured: 32-wide
-    * state more than doubled the replay). The override lives in a
-    * CLONED session (same SparkContext, own SQL conf/catalog), so
-    * queries planned concurrently on the caller's session keep their
-    * width; deployments with many pairs size it like any other
-    * shuffle. */
-  private def replayChunked[T](spark: SparkSession, rows: Array[T],
+    * The replay runs on Spark's default state store and checkpoint
+    * file manager, like the kill/restart specs and every deployment.
+    * Its settings live in a CLONED session (same SparkContext, own SQL
+    * conf/catalog), so queries planned concurrently on the caller's
+    * session keep theirs. */
+  private[graft] def replayChunked[T](spark: SparkSession, rows: Array[T],
       tsOf: T => Long, nChunks: Int, queryName: String,
       build: (Dataset[T], SparkSession) => DataFrame,
       flushRows: Seq[T] = Nil)
       (implicit enc: org.apache.spark.sql.Encoder[T]): DataFrame = {
     val replaySpark = spark.newSession()
+    // state-store partitions are fixed at query start from the shuffle
+    // width, and every partition loads and commits its store on every
+    // micro-batch even when empty, so a bounded replay keeps it small.
+    // Deployments size it like any other shuffle
     replaySpark.conf.set("spark.sql.shuffle.partitions", "4")
-    // a replay lives for 3-4 triggers: the state store's background
-    // maintenance (snapshot compaction, file GC — sized for
-    // long-running jobs) only contends with the foreground commits
-    // here, and there is no restart to retain history for
-    replaySpark.conf.set(
-      "spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
+    // the replay never restarts, so it needs no history: the offset
+    // and commit logs drop all but the last two batches as it goes,
+    // which keeps the RAM-disk checkpoint below bounded at any nChunks
     replaySpark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    // replay state lives and dies with this call: the default
-    // provider's per-partition serialize+compress+write delta cycle
-    // (~150-220ms per trigger at book-sized state, the largest single
-    // slice of the harness floor) buys durability the replay discards
-    // in the finally below. The heap-only provider keeps committed
-    // versions as cloned hash maps; the kill/restart specs keep the
-    // durable default — this conf lives ONLY on the cloned session
-    replaySpark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "GraftInMemoryStateStoreProvider")
-    // same argument for the offset WAL / commit log / metadata file:
-    // HDFS-API create+fsync+rename ceremony is ~75ms per trigger even
-    // on /dev/shm, all for files the finally below deletes
-    replaySpark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      "org.apache.spark.sql.execution.streaming.checkpointing." +
-        "GraftInMemoryCheckpointFileManager")
     // every processAllAvailable otherwise appends a NO-DATA trigger
     // (watermark-application batch) after each data batch — a full
     // state-store load/commit cycle that roughly doubles the trigger
@@ -504,52 +485,45 @@ object StreamingOps extends Serializable {
     // batches there.
     replaySpark.conf.set(
       "spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // the replay's checkpoint (offset WAL, commit log, state-store
-    // deltas) is pure harness scaffolding discarded on stop, yet at
-    // 3-4 micro-batches its per-batch fsyncs are ~60% of trigger time
-    // (measured: state commit ~220ms + WAL/offsets ~90ms per batch on
-    // this box). Put it on the RAM filesystem when one exists —
-    // a real deployment checkpoints to durable DFS, but verifying
-    // batch-equivalence needs no durability
+    // the checkpoint (offset WAL, commit log, state-store deltas) is
+    // scaffolding deleted in the finally below, and verifying
+    // batch-equivalence needs no durability: put it on the RAM
+    // filesystem when one exists, so the per-batch writes and renames
+    // never wait on a disk. A deployment checkpoints to durable DFS
     val ckBase = {
       val shm = java.nio.file.Paths.get("/dev/shm")
       val base = if (java.nio.file.Files.isWritable(shm)) shm
         else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
       java.nio.file.Files.createTempDirectory(base, "graft_replay_ck_")
     }
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[T](replaySpark)
-    val q = build(ms.toDS(), replaySpark)
-      .writeStream.outputMode("append").format("memory")
-      .option("checkpointLocation", ckBase.toString)
-      .queryName(queryName).start()
     try {
-      val target = math.max(1, rows.length / nChunks + 1)
-      var start = 0
-      while (start < rows.length) {
-        var end = math.min(start + target, rows.length)
-        while (end < rows.length && tsOf(rows(end)) == tsOf(rows(end - 1)))
-          end += 1
-        ms.addData(rows.slice(start, end).toIndexedSeq)
-        q.processAllAvailable()
-        start = end
-      }
-      flushRows.foreach { fr =>
-        ms.addData(Seq(fr))
-        q.processAllAvailable()
-      }
+      val ms = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[T](replaySpark)
+      val q = build(ms.toDS(), replaySpark)
+        .writeStream.outputMode("append").format("memory")
+        .option("checkpointLocation", ckBase.toString)
+        .queryName(queryName).start()
+      try {
+        val target = math.max(1, rows.length / nChunks + 1)
+        var start = 0
+        while (start < rows.length) {
+          var end = math.min(start + target, rows.length)
+          while (end < rows.length && tsOf(rows(end)) == tsOf(rows(end - 1)))
+            end += 1
+          ms.addData(rows.slice(start, end).toIndexedSeq)
+          q.processAllAvailable()
+          start = end
+        }
+        flushRows.foreach { fr =>
+          ms.addData(Seq(fr))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
     } finally {
-      q.stop()
-      // free the heap-only state NOW: provider unload otherwise waits
-      // for the maintenance cycle deliberately pushed to 1h above,
-      // and a bench JVM runs dozens of replays
-      org.apache.spark.sql.execution.streaming.state
-        .GraftInMemoryStateStoreProvider.clearAll(ckBase.toString)
-      org.apache.spark.sql.execution.streaming.checkpointing
-        .GraftInMemoryCheckpointFileManager.clearAll(ckBase.toString)
-      // reclaim the RAM-disk checkpoint immediately — /dev/shm is a
-      // shared, memory-backed resource (close the directory stream:
-      // a dozen replays per bench JVM would otherwise leak handles)
+      // reclaim the RAM-disk checkpoint immediately, also when the
+      // build or the start throws — /dev/shm is a shared,
+      // memory-backed resource (close the directory stream: a dozen
+      // replays per verify JVM would otherwise leak handles)
       def rm(p: java.nio.file.Path): Unit = {
         if (java.nio.file.Files.isDirectory(p)) {
           val s = java.nio.file.Files.list(p)

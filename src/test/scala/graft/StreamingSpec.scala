@@ -1332,4 +1332,42 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch)
     assert(batch.size === 1)
   }
+
+  test("replay harness removes its checkpoint directory, also when the build throws") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // the harness checkpoints under /dev/shm, or java.io.tmpdir where
+    // there is no writable RAM filesystem
+    def checkpoints(): Set[String] =
+      Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+        .map(java.nio.file.Paths.get(_))
+        .filter(java.nio.file.Files.isDirectory(_))
+        .flatMap { d =>
+          val s = java.nio.file.Files.list(d)
+          try s.iterator().asScala.map(_.toString).toList finally s.close()
+        }
+        .filter(_.contains("graft_replay_ck_")).toSet
+    val before = checkpoints()
+
+    // (a) a replay that runs to completion
+    val evts = Array(
+      BookEvent(1, 1L, 1L, "b", 100.0, 1.0, false),
+      BookEvent(1, 1L, 2L, "s", 101.0, 1.0, false),
+      BookEvent(1, 2L, 3L, "b", 100.5, 2.0, false),
+      BookEvent(1, 3L, 2L, "s", 101.0, 1.0, true))
+    val ticks = StreamingOps.l1Replay(spark.emptyDataFrame, spark,
+      nChunks = 2, preOrdered = Some(evts)).collect()
+    assert(ticks.nonEmpty)
+    assert(checkpoints() === before)
+
+    // (b) a build that throws before the query starts
+    val boom = intercept[IllegalStateException] {
+      StreamingOps.replayChunked(spark, evts, (e: BookEvent) => e.ts, 2,
+        "graft_failing_replay",
+        (_: org.apache.spark.sql.Dataset[BookEvent], _: SparkSession) =>
+          throw new IllegalStateException("build failed"))
+    }
+    assert(boom.getMessage === "build failed")
+    assert(checkpoints() === before)
+  }
 }
