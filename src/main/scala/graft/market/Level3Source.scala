@@ -42,6 +42,25 @@ object Level3Source {
     * scaled to this dataset's event spacing). */
   val EraGapMicros: Long = 2L * 3600 * 1000000
 
+  /** The per-user columns of the mapping above: pair and side. */
+  private def userCols(user: Column): Seq[Column] = Seq(
+    ((user % 3) + 1).cast("int").as("pair_id"),
+    when(user % 2 === 0, "b").otherwise("s").as("side"))
+
+  /** The adapter's event → order-event projection (the mapping above),
+    * the input of both window builds. */
+  private def orderEvents(events: DataFrame): DataFrame = {
+    val user = col("user_id")
+    events.select(Seq(col("event_id"),
+      tsMicros(col("ts")).as("microtimestamp"), user) ++ userCols(user) ++ Seq(
+      // asks priced +80 above the bid range: the two sides overlap in
+      // [80, ~200] so crossed books occur but are not the norm
+      when(user % 2 === 0, col("value"))
+        .otherwise(col("value") + 80.0).as("price"),
+      ((col("event_id") % 20) + 1).cast("double").as("amount"),
+      when(col("event_type") === "error", 1).otherwise(0).as("del_flag")): _*)
+  }
+
   /** events DataFrame (event_id, ts, user_id, event_type, value, props)
     * → level3 DataFrame with columns:
     * microtimestamp(Long µs), order_id, event_no, side, price, amount,
@@ -76,19 +95,7 @@ object Level3Source {
     * DuckDB mirror in the gate runs of docs/verify/gate_log.txt). At
     * 100 TB the build shuffles the log once instead of three times. */
   def level3(events: DataFrame): DataFrame = {
-    val base = events.select(
-      col("event_id"),
-      tsMicros(col("ts")).as("microtimestamp"),
-      col("user_id"),
-      ((col("user_id") % 3) + 1).cast("int").as("pair_id"),
-      when(col("user_id") % 2 === 0, "b").otherwise("s").as("side"),
-      // asks priced +80 above the bid range: the two sides overlap in
-      // [80, ~200] so crossed books occur but are not the norm
-      when(col("user_id") % 2 === 0, col("value"))
-        .otherwise(col("value") + 80.0).as("price"),
-      ((col("event_id") % 20) + 1).cast("double").as("amount"),
-      when(col("event_type") === "error", 1).otherwise(0).as("del_flag"))
-
+    val base = orderEvents(events)
     val wUser = Window.partitionBy("user_id")
       .orderBy("microtimestamp", "event_id")
     val run = wUser.rowsBetween(Window.unboundedPreceding, 0)
@@ -182,27 +189,15 @@ object Level3Source {
     * fills across the boundary. */
   def continueBuild(events: DataFrame, state: DataFrame)
       : (DataFrame, DataFrame) = {
-    val base = events.select(
-      col("event_id"),
-      tsMicros(col("ts")).as("microtimestamp"),
-      col("user_id"),
-      ((col("user_id") % 3) + 1).cast("int").as("pair_id"),
-      when(col("user_id") % 2 === 0, "b").otherwise("s").as("side"),
-      when(col("user_id") % 2 === 0, col("value"))
-        .otherwise(col("value") + 80.0).as("price"),
-      ((col("event_id") % 20) + 1).cast("double").as("amount"),
-      when(col("event_type") === "error", 1).otherwise(0).as("del_flag"),
-      lit(false).as("carry"))
+    val base = orderEvents(events).withColumn("carry", lit(false))
     val carryRows = state.filter(col("order_id").isNotNull).select(
-      lit(-1L).as("event_id"),
-      col("last_ts").as("microtimestamp"),
-      col("user_id"),
-      ((col("user_id") % 3) + 1).cast("int").as("pair_id"),
-      when(col("user_id") % 2 === 0, "b").otherwise("s").as("side"),
-      col("last_price").as("price"),
-      col("last_amount").as("amount"),
-      lit(0).as("del_flag"),
-      lit(true).as("carry"))
+      Seq(lit(-1L).as("event_id"),
+        col("last_ts").as("microtimestamp"),
+        col("user_id")) ++ userCols(col("user_id")) ++
+      Seq(col("last_price").as("price"),
+        col("last_amount").as("amount"),
+        lit(0).as("del_flag"),
+        lit(true).as("carry")): _*)
     val st = state.select(col("user_id").as("s_user"),
       coalesce(col("del_base"), lit(0L)).as("del_base"),
       col("order_id").as("s_oid"), col("event_count"),

@@ -142,13 +142,8 @@ case class SlicedEvent(
   */
 object Replay {
 
-  /** Generic fold: applies episodes in order, calling `emit` with
-    * (episodeTs, book, touchedLevels) after each episode. */
-  def episodes[T](
-      events: Iterator[BookEvent],
-      emit: (Long, OrderBook, List[(Boolean, Double)]) => IterableOnce[T])
-      : Iterator[T] = episodesFrom(new OrderBook, events, emit)
-
+  /** The one episode scan: applies episodes in order to `book`, calling
+    * `emit` with (episodeTs, book, touchedLevels) after each episode. */
   private def episodesFrom[T](
       book: OrderBook,
       events: Iterator[BookEvent],
@@ -196,7 +191,9 @@ object Replay {
     l1From(pairId, book, last0, buf.map(_.toBookEvent))
   }
 
-  private def l1From(pairId: Int, book: OrderBook, last0: L1Tick,
+  /** L1 emission continuing from `book` and `last0`, the last emitted
+    * quote (null = none yet, so the first episode emits). */
+  private[graft] def l1From(pairId: Int, book: OrderBook, last0: L1Tick,
       events: Iterator[BookEvent]): Iterator[L1Tick] = {
     var last: L1Tick = last0
     episodesFrom(book, events, (ts, b, _) => {
@@ -281,43 +278,34 @@ object Replay {
     * whose total actually changed (reference:
     * `db/c/obadiah_db/order_book.cpp:59-173`). */
   def l2(pairId: Int, events: Iterator[BookEvent]): Iterator[L2Change] =
-    l2From(pairId, new OrderBook,
-      mutable.HashMap.empty[(Boolean, Double), Double], events)
+    l2From(pairId, new OrderBook, events)
 
-  /** Slice-parallel L2: the seeded book's standing levels become the
-    * per-level "previous total" state, so each group emits exactly the
-    * deltas the sequential pass would (see [[l1Sliced]]). */
+  /** Slice-parallel L2: emits exactly the deltas the sequential pass
+    * would (see [[l1Sliced]] and [[l2From]]). */
   def l2Sliced(pairId: Int, events: Iterator[SlicedEvent]): Iterator[L2Change] = {
     val buf = events.buffered
     val (book, _) = seedBook(buf)
+    l2From(pairId, book, buf.map(_.toBookEvent))
+  }
+
+  /** L2 emission continuing from `book`: its standing levels become the
+    * per-level "previous total" state, so a seeded book (a slice
+    * boundary, or the live `StreamingOps.l2Stream` book rebuilt from
+    * state) emits exactly the deltas one sequential pass would. */
+  private[graft] def l2From(pairId: Int, book: OrderBook,
+      events: Iterator[BookEvent]): Iterator[L2Change] = {
     val prev = mutable.HashMap.empty[(Boolean, Double), Double]
     for (isBid <- Seq(true, false); (price, vol) <- book.depth(isBid))
       prev.update((isBid, price), vol)
-    l2From(pairId, book, prev, buf.map(_.toBookEvent))
-  }
-
-  private def l2From(pairId: Int, book: OrderBook,
-      prev: mutable.HashMap[(Boolean, Double), Double],
-      events: Iterator[BookEvent]): Iterator[L2Change] = {
-    val buf = events.buffered
-    new Iterator[Iterator[L2Change]] {
-      override def hasNext: Boolean = buf.hasNext
-      override def next(): Iterator[L2Change] = {
-        val ts = buf.head.ts
-        var touched: List[(Boolean, Double)] = Nil
-        while (buf.hasNext && buf.head.ts == ts)
-          touched = book.apply(buf.next()) reverse_::: touched
-        touched.distinct.flatMap { case (isBid, price) =>
-          val now = book.volumeAt(isBid, price)
-          val before = prev.getOrElse((isBid, price), 0.0)
-          if (now != before) {
-            if (now == 0.0) prev.remove((isBid, price))
-            else prev.update((isBid, price), now)
-            Some(L2Change(pairId, ts, if (isBid) "b" else "s", price, now))
-          } else None
-        }.iterator
-      }
-    }.flatten
+    episodesFrom(book, events, (ts, b, touched) =>
+      touched.distinct.flatMap { case (isBid, price) =>
+        val now = b.volumeAt(isBid, price)
+        if (now != prev.getOrElse((isBid, price), 0.0)) {
+          if (now == 0.0) prev.remove((isBid, price))
+          else prev.update((isBid, price), now)
+          Some(L2Change(pairId, ts, if (isBid) "b" else "s", price, now))
+        } else None
+      })
   }
 
 }

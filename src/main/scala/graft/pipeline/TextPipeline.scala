@@ -312,9 +312,13 @@ object TextPipeline {
     * ascending as the deterministic tiebreak — quality ties are
     * common, duplicates score identically). One extra cluster-keyed
     * window over the already-labelled frame. */
-  def dedupKeepBest(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val labelled = dedupClusters(docs, pairs)
-    val qual = qualityScore(docs).select(col("doc_id"), col("quality_score"))
+  def dedupKeepBest(docs: DataFrame, pairs: DataFrame): DataFrame =
+    keepBest(dedupClusters(docs, pairs),
+      qualityScore(docs).select(col("doc_id"), col("quality_score")))
+
+  /** [[dedupKeepBest]]'s keeper window over cluster labels and an
+    * already-scored `(doc_id, quality_score)` frame. */
+  private def keepBest(labelled: DataFrame, qual: DataFrame): DataFrame = {
     val w = Window.partitionBy("cluster_id")
       .orderBy(col("quality_score").desc, col("doc_id"))
     labelled.join(qual, "doc_id")
@@ -697,21 +701,19 @@ object TextPipeline {
       minQuality: Double = 0.5, L: Int = 4): DataFrame = {
     val corpus = docs.filter(col("doc_id") >= benchMax)
       .select(col("doc_id"), col("text"))
-    // k1's lineage is evaluated twice inside the k2 checkpoint (probe
-    // side + exactDedup's input) — the narrow checkpointed gate frame
-    // keeps the quality text scan out of the duplicated prefix
-    val qual = qualityScore(corpus)
-      .select(col("doc_id"), col("quality_score"))
-      .localCheckpoint(false)
+    // the gate's score rides through k1/k2 into the keeper choice, which
+    // reads it from k2's checkpoint instead of re-scoring the survivors
     val k1 = corpus.join(
-      qual.filter(col("quality_score") >= minQuality).select("doc_id"),
+      qualityScore(corpus).filter(col("quality_score") >= minQuality)
+        .select(col("doc_id"), col("quality_score")),
       "doc_id")
     val k2 = k1.join(
       exactDedup(k1).filter(!col("is_dup")).select("doc_id"), "doc_id")
       .localCheckpoint(false)
-    val best = dedupKeepBest(k2, minhashCandidates(k2))
+    val best = keepBest(dedupClusters(k2, minhashCandidates(k2)),
+      k2.select(col("doc_id"), col("quality_score")))
     val k3 = k2.join(best.filter(col("is_kept"))
-        .select(col("doc_id"), col("cluster_size"), col("quality_score")),
+        .select(col("doc_id"), col("cluster_size")),
       "doc_id")
       .localCheckpoint(false)
     // one gram pass over the survivors feeds BOTH span sources

@@ -2,10 +2,10 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.market.{BookEvent, L1Tick, OrderBook}
+import graft.market.{BookEvent, L1Tick, L2Change, OrderBook, Replay}
 
 /** Structured Streaming tier — the analogue of the reference's capture →
   * scheduled-ETL pipeline (SURVEY §2.5): the reference drains transient
@@ -14,10 +14,12 @@ import graft.market.{BookEvent, L1Tick, OrderBook}
   * + micro-batch stateful replay.
   *
   * The book state lives in `GroupState` keyed by pair — O(live orders)
-  * per key, exactly the batch kernel's state — so the same replay
-  * semantics run incrementally. Late events beyond the watermark are
-  * dropped (the reference's reorder buffer + delay give the same
-  * guarantee, `python/obadiah/reorder.py:27-112`).
+  * per key, exactly the batch kernel's state. The L1 and L2 streams
+  * fold each micro-batch through the batch kernel itself
+  * (`Replay.l1From`, `Replay.l2From`) seeded from that state, so stream
+  * and batch share one episode scan and one emission rule. Late events
+  * beyond the watermark are dropped (the reference's reorder buffer +
+  * delay give the same guarantee, `python/obadiah/reorder.py:27-112`).
   */
 object StreamingOps extends Serializable {
 
@@ -52,124 +54,85 @@ object StreamingOps extends Serializable {
       live.map(_._2._3))
   }
 
-  /** Incremental L1 stream over a streaming level3-event source.
-    * Each micro-batch's events are sorted by event time within the
-    * (small, watermark-bounded) batch, applied to the persistent book,
-    * and deduped ticks are emitted. */
+  private val NoBook =
+    BookState(Array.empty, Array.empty, Array.empty, Array.empty, None)
+
+  /** A micro-batch in replay order: within-batch order is not
+    * guaranteed by the engine, so the (small, watermark-bounded) batch
+    * is stable-sorted by (ts, orderId), which keeps the source's
+    * event_no order among an order's same-instant events. */
+  private def byTime(batch: Iterator[BookEvent]): Iterator[BookEvent] = {
+    val arr = batch.toArray
+    scala.util.Sorting.stableSort(arr,
+      (a: BookEvent, b: BookEvent) =>
+        a.ts < b.ts || (a.ts == b.ts && a.orderId < b.orderId))
+    arr.iterator
+  }
+
+  private def stored(book: OrderBook, lastTick: Option[(Long,
+      Option[Double], Option[Double], Option[Double], Option[Double])])
+      : BookState = {
+    val (ids, isBid, prices, amounts) = liveArrays(book)
+    BookState(ids, isBid, prices, amounts, lastTick)
+  }
+
+  /** Incremental L1 stream over a streaming level3-event source: each
+    * micro-batch folds through `Replay.l1From`, seeded with the stored
+    * book and last emitted quote, so it emits what the batch L1 kernel
+    * emits for the same events. */
   def l1Stream(events: Dataset[BookEvent], spark: SparkSession)
       : DataFrame = {
     import spark.implicits._
-
-    def update(pairId: Int, batch: Iterator[BookEvent],
-        state: GroupState[BookState]): Iterator[L1Tick] = {
-      val st = state.getOption.getOrElse(BookState(Array.emptyLongArray,
-        Array.emptyBooleanArray, Array.emptyDoubleArray,
-        Array.emptyDoubleArray, None))
-      val book = rebuildBook(pairId, st.ordIds, st.ordIsBid,
-        st.ordPrices, st.ordAmounts)
-      var last = st.lastTick
-      val out = scala.collection.mutable.ListBuffer.empty[L1Tick]
-      // within-batch ordering is not guaranteed by the engine: sort the
-      // watermark-bounded batch before applying. Events sharing a
-      // microtimestamp form one episode (an atomic book transition, see
-      // ReplayKernel.episodesFrom): the quote is evaluated once per
-      // episode, after all its events are applied — never mid-episode.
-      // Episodes are scanned as RUNS of equal ts in the sorted array —
-      // a groupBy(_.ts) here re-hashed and re-sorted ~20k episode keys
-      // per trigger on top of the sort (~30% of the fold, measured)
-      val arr = batch.toArray
-      scala.util.Sorting.stableSort(arr,
-        (a: BookEvent, b: BookEvent) =>
-          a.ts < b.ts || (a.ts == b.ts && a.orderId < b.orderId))
-      var i = 0
-      while (i < arr.length) {
-        val ts = arr(i).ts
-        var j = i
-        while (j < arr.length && arr(j).ts == ts) {
-          book.apply(arr(j)); j += 1
-        }
-        val t = (ts, book.bestBid.map(_._1), book.bestBid.map(_._2),
-          book.bestAsk.map(_._1), book.bestAsk.map(_._2))
-        val changed = last.forall(l =>
-          l._2 != t._2 || l._3 != t._3 || l._4 != t._4 || l._5 != t._5)
-        if (changed) {
-          out += L1Tick(pairId, t._1, t._2, t._3, t._4, t._5)
-          last = Some(t)
-        }
-        i = j
-      }
-      // snapshot the live orders back into state
-      val (ids, isBid, prices, amounts) = liveArrays(book)
-      state.update(BookState(ids, isBid, prices, amounts, last))
-      out.iterator
+    perPair(events, (e: BookEvent) => e.pairId,
+        GroupStateTimeout.NoTimeout) {
+      (pairId: Int, batch: Iterator[BookEvent], state: GroupState[BookState]) =>
+        val st = state.getOption.getOrElse(NoBook)
+        val book = rebuildBook(pairId, st.ordIds, st.ordIsBid,
+          st.ordPrices, st.ordAmounts)
+        val last0 = st.lastTick.map { case (ts, bp, bq, ap, aq) =>
+          L1Tick(pairId, ts, bp, bq, ap, aq) }.orNull
+        // materialised before the book is stored: the kernel is lazy
+        val out = Replay.l1From(pairId, book, last0, byTime(batch)).toArray
+        state.update(stored(book, out.lastOption.map(t =>
+          (t.ts, t.bid_price, t.bid_qty, t.ask_price, t.ask_qty))
+          .orElse(st.lastTick)))
+        out.iterator
     }
-
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", "2 minutes")
-      .as[BookEvent]
-      .groupByKey(_.pairId)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-      .toDF()
   }
 
-  /** Incremental L2 depth-change stream. The persisted state is just
-    * the live orders: the previous per-level totals are exactly the
-    * totals of the rebuilt book, so no separate level map is stored. */
+  /** Incremental L2 depth-change stream: each micro-batch folds through
+    * `Replay.l2From`, seeded with the stored book's standing levels as
+    * `l2Sliced` seeds a slice. The persisted state is just the live
+    * orders: the previous per-level totals are exactly the totals of
+    * the rebuilt book, so no separate level map is stored. */
   def l2Stream(events: Dataset[BookEvent], spark: SparkSession)
       : DataFrame = {
     import spark.implicits._
-    import graft.market.L2Change
-
-    def update(pairId: Int, batch: Iterator[BookEvent],
-        state: GroupState[BookState]): Iterator[L2Change] = {
-      val st = state.getOption.getOrElse(BookState(Array.emptyLongArray,
-        Array.emptyBooleanArray, Array.emptyDoubleArray,
-        Array.emptyDoubleArray, None))
-      val book = rebuildBook(pairId, st.ordIds, st.ordIsBid,
-        st.ordPrices, st.ordAmounts)
-      val prev = scala.collection.mutable.HashMap.empty[(Boolean, Double), Double]
-      Seq(true, false).foreach(isBid => book.depth(isBid).foreach {
-        case (price, vol) => prev.update((isBid, price), vol) })
-      val out = scala.collection.mutable.ListBuffer.empty[L2Change]
-      // run-scan episodes in the sorted array (see l1Stream)
-      val arr = batch.toArray
-      scala.util.Sorting.stableSort(arr,
-        (a: BookEvent, b: BookEvent) =>
-          a.ts < b.ts || (a.ts == b.ts && a.orderId < b.orderId))
-      var i = 0
-      while (i < arr.length) {
-        val ts = arr(i).ts
-        var touched: List[(Boolean, Double)] = Nil
-        var j = i
-        while (j < arr.length && arr(j).ts == ts) {
-          touched = book.apply(arr(j)) ::: touched; j += 1
-        }
-        touched.distinct.foreach { case (isBid, price) =>
-          val now = book.volumeAt(isBid, price)
-          if (now != prev.getOrElse((isBid, price), 0.0)) {
-            if (now == 0.0) prev.remove((isBid, price))
-            else prev.update((isBid, price), now)
-            out += L2Change(pairId, ts, if (isBid) "b" else "s", price, now)
-          }
-        }
-        i = j
-      }
-      val (ids, isBid, prices, amounts) = liveArrays(book)
-      state.update(BookState(ids, isBid, prices, amounts, None))
-      out.iterator
+    perPair(events, (e: BookEvent) => e.pairId,
+        GroupStateTimeout.NoTimeout) {
+      (pairId: Int, batch: Iterator[BookEvent], state: GroupState[BookState]) =>
+        val st = state.getOption.getOrElse(NoBook)
+        val book = rebuildBook(pairId, st.ordIds, st.ordIsBid,
+          st.ordPrices, st.ordAmounts)
+        val out = Replay.l2From(pairId, book, byTime(batch)).toArray
+        state.update(stored(book, None))
+        out.iterator
     }
+  }
 
-    events
+  /** The plumbing shared by the per-pair streams: an `event_time`
+    * column from `ts` (µs) with the reference's 2-minute watermark, then
+    * one `flatMapGroupsWithState` per pair in append mode. */
+  private def perPair[T: Encoder, S: Encoder, U: Encoder](
+      rows: Dataset[T], pairOf: T => Int, timeout: GroupStateTimeout)(
+      update: (Int, Iterator[T], GroupState[S]) => Iterator[U]): DataFrame =
+    rows
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", "2 minutes")
-      .as[BookEvent]
-      .groupByKey(_.pairId)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+      .as[T]
+      .groupByKey(pairOf)(Encoders.scalaInt)
+      .flatMapGroupsWithState(OutputMode.Append, timeout)(update)
       .toDF()
-  }
 
   /** A fill event entering the streaming trade matcher. */
   case class PairFill(pairId: Int, ts: Long, orderId: Long, eventNo: Int,
@@ -244,14 +207,8 @@ object StreamingOps extends Serializable {
       out.iterator
     }
 
-    fills
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", "2 minutes")
-      .as[PairFill]
-      .groupByKey(_.pairId)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
-      .toDF()
+    perPair(fills, (f: PairFill) => f.pairId,
+      GroupStateTimeout.EventTimeTimeout)(update)
   }
 
   /** One order event entering the streaming classifier (the
@@ -406,15 +363,9 @@ object StreamingOps extends Serializable {
       out.iterator
     }
 
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", "2 minutes")
-      .as[OrderEvt]
-      .groupByKey(_.pairId)
-      .flatMapGroupsWithState(OutputMode.Append,
-        if (idleTtlMs.isDefined) GroupStateTimeout.EventTimeTimeout
-        else GroupStateTimeout.NoTimeout)(update)
-      .toDF()
+    perPair(events, (e: OrderEvt) => e.pairId,
+      if (idleTtlMs.isDefined) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout)(update)
   }
 
   /** The streaming classifier driven over a bounded level3 log in
@@ -586,8 +537,9 @@ object StreamingOps extends Serializable {
     * Default nChunks = 3 like the rest of the family (ADVICE r16: the
     * r16 bench-motivated 3→2 cut had leaked into the API default,
     * silently lowering every caller's cross-batch coverage to the
-    * documented floor). The BENCH/VERIFY call site passes nChunks = 2
-    * explicitly — the L2 replay emits ~1.6 output rows per input
+    * documented floor). The `mkt_l2_stream` query in `SparkEntry`
+    * passes nChunks = 2 explicitly — the L2 replay emits ~1.6 output
+    * rows per input
     * event, the heaviest per-trigger encode volume of the family, so
     * each extra trigger pays the most here (measured at sf0.1:
     * 3 chunks ≈ 2.1-2.5 s, 2 chunks ≈ 1.9 s), while TWO data batches

@@ -10,6 +10,10 @@ and compares against the Spark result: columns sorted by name, rows
 sorted by all columns, exact cell equality (floats compared exactly
 first, then with 1e-9 rel tolerance reported separately).
 
+Each PASS/FAIL line carries that query's check seconds (read, oracle
+and compare); the ten slowest follow, and the `== N pass / M fail ==`
+summary is always the last line.
+
 Dtype-strict: both sides reach pandas through the same DuckDB
 conversion, so any pandas-dtype difference is a genuine type
 difference in the underlying data (e.g. an uncast DuckDB HUGEINT
@@ -24,6 +28,7 @@ import math
 import os
 import sys
 import tempfile
+import time
 
 import duckdb
 
@@ -172,20 +177,28 @@ def main(out_dir, sf_dir):
         return 1
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    secs = {}
     for name, sql in sorted(oracle.items()):
+        t0 = time.perf_counter()
         rows_ok, schema_ok, hash_ok, err, msg = \
             check_one(con, out_dir, name, sql)
+        secs[name] = time.perf_counter() - t0
         record[name] = {"rows_match": bool(rows_ok),
                         "schema_match": bool(schema_ok),
                         "hash_match": bool(hash_ok),
                         "err": err}
         write_incremental(record)
+        verdict = "PASS" if hash_ok else "FAIL"
+        print(f"{verdict} {name} [{secs[name]:.2f} s]: {msg}", flush=True)
         if hash_ok:
-            print(f"PASS {name}: {msg}")
             n_pass += 1
         else:
-            print(f"FAIL {name}: {msg}")
             n_fail += 1
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:10]
+    print(f"slowest checks ({sum(secs.values()):.1f} s over "
+          f"{len(secs)} queries):")
+    for name, s in slowest:
+        print(f"  {s:8.2f} s  {name}")
     print(f"== {n_pass} pass / {n_fail} fail ==")
     return 1 if n_fail else 0
 

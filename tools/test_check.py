@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
-"""Unit tests for the verdict record that tools/check.py writes.
+"""Unit tests for the verdict record and the output of tools/check.py.
 
 Usage: python3 tools/test_check.py
 
 Each test points check.LAST_CORRECTNESS at a fresh temp dir, so the
 committed docs/verify/last_correctness.json is never touched.
 """
+import contextlib
+import io
 import json
 import os
+import re
 import sys
 import tempfile
 import unittest
@@ -55,6 +58,35 @@ class VerdictRecordTest(unittest.TestCase):
                      if n.endswith(".tmp")]
         self.assertEqual(leftovers, [])
 
+    def test_pass_line_carries_time_and_summary_is_last(self):
+        # one-query fixture: tiny tables and the Spark-side result, all
+        # written to parquet by DuckDB
+        sf = os.path.join(self.tmp.name, "sf")
+        out = os.path.join(self.tmp.name, "out")
+        os.makedirs(sf)
+        os.makedirs(os.path.join(out, "q_nation"))
+        con = duckdb.connect()
+        for t in check.TABLES:
+            con.execute(f"CREATE TABLE {t} AS SELECT * FROM (VALUES "
+                        "(0, 'ALGERIA', 1, 'error'), (1, 'ARGENTINA', 2, 'x')) "
+                        "v(n_nationkey, n_name, user_id, event_type)")
+            con.execute(f"COPY {t} TO '{sf}/{t}.parquet' (FORMAT PARQUET)")
+        sql = "SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey"
+        con.execute(f"COPY ({sql}) TO '{out}/q_nation/part-0.parquet' "
+                    "(FORMAT PARQUET)")
+        with open(os.path.join(out, "oracle_sql.json"), "w") as f:
+            json.dump({"q_nation": sql}, f)
+        stdout = io.StringIO()
+        with contextlib.redirect_stdout(stdout):
+            rc = check.main(out, sf)
+        lines = stdout.getvalue().splitlines()
+        self.assertEqual(rc, 0)
+        self.assertRegex(lines[0], r"^PASS q_nation \[\d+\.\d{2} s\]: ")
+        # the summary is the only line tools/verify.sh's grep matches,
+        # and the last one
+        summaries = [ln for ln in lines if re.match(r"^== .* ==$", ln)]
+        self.assertEqual(summaries, ["== 1 pass / 0 fail =="])
+        self.assertEqual(lines[-1], summaries[0])
 
 if __name__ == "__main__":
     unittest.main()
