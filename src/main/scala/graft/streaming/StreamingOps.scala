@@ -17,19 +17,23 @@ import graft.market.{BookEvent, L1Tick, L2Change, OrderBook, Replay}
   * per key, exactly the batch kernel's state. The L1 and L2 streams
   * fold each micro-batch through the batch kernel itself
   * (`Replay.l1From`, `Replay.l2From`) seeded from that state, so stream
-  * and batch share one episode scan and one emission rule. Late events
-  * beyond the watermark are dropped (the reference's reorder buffer +
-  * delay give the same guarantee, `python/obadiah/reorder.py:27-112`).
+  * and batch share one episode scan and one emission rule. Their state
+  * value is one `Array[Byte]` per pair (a single binary column; layout
+  * at [[bookBytes]]): the live orders and, for L1, the last emitted
+  * quote. Spark's state-schema check therefore rejects an
+  * `l1Stream`/`l2Stream` checkpoint written with the earlier
+  * case-class state; such a query restarts from a new checkpoint.
+  *
+  * The per-pair streams ([[l1Stream]], [[l2Stream]], [[tradesStream]],
+  * [[orderTypeStream]]) drop every event whose `ts` is behind the
+  * batch's event-time watermark, so a late event changes no book and
+  * emits nothing (the reference's reorder buffer + delay give the same
+  * guarantee, `python/obadiah/reorder.py:27-112`). Unless the session
+  * already names one, they checkpoint through
+  * [[LocalCheckpointFileManager]], which on local paths starts no
+  * child process per checkpoint file.
   */
 object StreamingOps extends Serializable {
-
-  /** Persisted order-book state between micro-batches. Live orders are
-    * parallel primitive arrays (bulk-copy through the GroupState
-    * encoder each batch — a `List[case class]` deserializes
-    * element-by-element; see [[ClassifyState]]). */
-  case class BookState(ordIds: Array[Long], ordIsBid: Array[Boolean],
-      ordPrices: Array[Double], ordAmounts: Array[Double],
-      lastTick: Option[(Long, Option[Double], Option[Double], Option[Double], Option[Double])])
 
   /** Rebuild a book from array state; returns the book. */
   private def rebuildBook(pairId: Int, ids: Array[Long],
@@ -54,9 +58,6 @@ object StreamingOps extends Serializable {
       live.map(_._2._3))
   }
 
-  private val NoBook =
-    BookState(Array.empty, Array.empty, Array.empty, Array.empty, None)
-
   /** A micro-batch in replay order: within-batch order is not
     * guaranteed by the engine, so the (small, watermark-bounded) batch
     * is stable-sorted by (ts, orderId), which keeps the source's
@@ -69,11 +70,56 @@ object StreamingOps extends Serializable {
     arr.iterator
   }
 
-  private def stored(book: OrderBook, lastTick: Option[(Long,
-      Option[Double], Option[Double], Option[Double], Option[Double])])
-      : BookState = {
-    val (ids, isBid, prices, amounts) = liveArrays(book)
-    BookState(ids, isBid, prices, amounts, lastTick)
+  /** A pair's book as one state value, written with a
+    * `DataOutputStream`: the live-order count, each order as (id: long,
+    * isBid: boolean, price: double, amount: double), then whether a
+    * quote follows and, if so, its ts (long) and, for each of bid price,
+    * bid qty, ask price and ask qty, a presence flag and the value. */
+  private def bookBytes(book: OrderBook, last: L1Tick): Array[Byte] = {
+    val live = book.liveOrders.toArray
+    val bytes = new java.io.ByteArrayOutputStream(
+      4 + 25 * live.length + 1 + (if (last == null) 0 else 8 + 4 * 9))
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeInt(live.length)
+    live.foreach { case (id, (isBid, price, amount)) =>
+      out.writeLong(id); out.writeBoolean(isBid)
+      out.writeDouble(price); out.writeDouble(amount)
+    }
+    out.writeBoolean(last != null)
+    if (last != null) {
+      out.writeLong(last.ts)
+      Seq(last.bid_price, last.bid_qty, last.ask_price, last.ask_qty)
+        .foreach { v => out.writeBoolean(v.isDefined); v.foreach(out.writeDouble) }
+    }
+    bytes.toByteArray
+  }
+
+  /** The book and last quote (null = none) of a [[bookBytes]] value;
+    * an empty book for a pair with no state yet. */
+  private def bookOf(pairId: Int, state: GroupState[Array[Byte]])
+      : (OrderBook, L1Tick) = {
+    val book = new OrderBook
+    if (!state.exists) return (book, null)
+    val in = new java.io.DataInputStream(
+      new java.io.ByteArrayInputStream(state.get))
+    var n = in.readInt()
+    while (n > 0) {
+      val id = in.readLong()
+      val side = if (in.readBoolean()) "b" else "s"
+      val price = in.readDouble()
+      val amount = in.readDouble()
+      book.apply(BookEvent(pairId, 0L, id, side, price, amount,
+        isDeleted = false))
+      n -= 1
+    }
+    val last = if (!in.readBoolean()) null else {
+      val ts = in.readLong()
+      def opt(): Option[Double] =
+        if (in.readBoolean()) Some(in.readDouble()) else None
+      val (bp, bq, ap, aq) = (opt(), opt(), opt(), opt())
+      L1Tick(pairId, ts, bp, bq, ap, aq)
+    }
+    (book, last)
   }
 
   /** Incremental L1 stream over a streaming level3-event source: each
@@ -83,19 +129,14 @@ object StreamingOps extends Serializable {
   def l1Stream(events: Dataset[BookEvent], spark: SparkSession)
       : DataFrame = {
     import spark.implicits._
-    perPair(events, (e: BookEvent) => e.pairId,
+    perPair(events, (e: BookEvent) => e.pairId, (e: BookEvent) => e.ts,
         GroupStateTimeout.NoTimeout) {
-      (pairId: Int, batch: Iterator[BookEvent], state: GroupState[BookState]) =>
-        val st = state.getOption.getOrElse(NoBook)
-        val book = rebuildBook(pairId, st.ordIds, st.ordIsBid,
-          st.ordPrices, st.ordAmounts)
-        val last0 = st.lastTick.map { case (ts, bp, bq, ap, aq) =>
-          L1Tick(pairId, ts, bp, bq, ap, aq) }.orNull
+      (pairId: Int, batch: Iterator[BookEvent],
+          state: GroupState[Array[Byte]]) =>
+        val (book, last0) = bookOf(pairId, state)
         // materialised before the book is stored: the kernel is lazy
         val out = Replay.l1From(pairId, book, last0, byTime(batch)).toArray
-        state.update(stored(book, out.lastOption.map(t =>
-          (t.ts, t.bid_price, t.bid_qty, t.ask_price, t.ask_qty))
-          .orElse(st.lastTick)))
+        state.update(bookBytes(book, out.lastOption.getOrElse(last0)))
         out.iterator
     }
   }
@@ -108,31 +149,52 @@ object StreamingOps extends Serializable {
   def l2Stream(events: Dataset[BookEvent], spark: SparkSession)
       : DataFrame = {
     import spark.implicits._
-    perPair(events, (e: BookEvent) => e.pairId,
+    perPair(events, (e: BookEvent) => e.pairId, (e: BookEvent) => e.ts,
         GroupStateTimeout.NoTimeout) {
-      (pairId: Int, batch: Iterator[BookEvent], state: GroupState[BookState]) =>
-        val st = state.getOption.getOrElse(NoBook)
-        val book = rebuildBook(pairId, st.ordIds, st.ordIsBid,
-          st.ordPrices, st.ordAmounts)
+      (pairId: Int, batch: Iterator[BookEvent],
+          state: GroupState[Array[Byte]]) =>
+        val (book, _) = bookOf(pairId, state)
         val out = Replay.l2From(pairId, book, byTime(batch)).toArray
-        state.update(stored(book, None))
+        state.update(bookBytes(book, null))
         out.iterator
     }
   }
 
   /** The plumbing shared by the per-pair streams: an `event_time`
     * column from `ts` (µs) with the reference's 2-minute watermark, then
-    * one `flatMapGroupsWithState` per pair in append mode. */
+    * one `flatMapGroupsWithState` per pair in append mode, whose update
+    * sees only the rows whose `ts` is not behind the batch's watermark.
+    * Spark drops late rows itself only under `EventTimeTimeout`, so
+    * without this filter a late event would still move an L1 or L2
+    * book. The stream's session checkpoints through
+    * [[LocalCheckpointFileManager]] ([[useLocalCheckpoints]]). */
   private def perPair[T: Encoder, S: Encoder, U: Encoder](
-      rows: Dataset[T], pairOf: T => Int, timeout: GroupStateTimeout)(
-      update: (Int, Iterator[T], GroupState[S]) => Iterator[U]): DataFrame =
+      rows: Dataset[T], pairOf: T => Int, tsOf: T => Long,
+      timeout: GroupStateTimeout)(
+      update: (Int, Iterator[T], GroupState[S]) => Iterator[U]): DataFrame = {
+    useLocalCheckpoints(rows.sparkSession)
     rows
       .withColumn("event_time", timestamp_micros(col("ts")))
       .withWatermark("event_time", "2 minutes")
       .as[T]
       .groupByKey(pairOf)(Encoders.scalaInt)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(update)
+      .flatMapGroupsWithState(OutputMode.Append, timeout) {
+        (pairId: Int, batch: Iterator[T], state: GroupState[S]) =>
+          val wmMicros = state.getCurrentWatermarkMs() * 1000L
+          update(pairId, batch.filter(tsOf(_) >= wmMicros), state)
+      }
       .toDF()
+  }
+
+  /** Names [[LocalCheckpointFileManager]] as `session`'s checkpoint
+    * manager unless the session or its Hadoop configuration already
+    * names one. */
+  private def useLocalCheckpoints(session: SparkSession): Unit = {
+    val key = LocalCheckpointFileManager.ConfKey
+    if (session.conf.getOption(key).isEmpty &&
+        session.sparkContext.hadoopConfiguration.get(key) == null)
+      session.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+  }
 
   /** A fill event entering the streaming trade matcher. */
   case class PairFill(pairId: Int, ts: Long, orderId: Long, eventNo: Int,
@@ -207,7 +269,7 @@ object StreamingOps extends Serializable {
       out.iterator
     }
 
-    perPair(fills, (f: PairFill) => f.pairId,
+    perPair(fills, (f: PairFill) => f.pairId, (f: PairFill) => f.ts,
       GroupStateTimeout.EventTimeTimeout)(update)
   }
 
@@ -363,7 +425,7 @@ object StreamingOps extends Serializable {
       out.iterator
     }
 
-    perPair(events, (e: OrderEvt) => e.pairId,
+    perPair(events, (e: OrderEvt) => e.pairId, (e: OrderEvt) => e.ts,
       if (idleTtlMs.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout)(update)
   }
@@ -405,9 +467,10 @@ object StreamingOps extends Serializable {
     * through a `MemoryStream`; a deployment reads a real stream
     * source instead and never collects.
     *
-    * The replay runs on Spark's default state store and checkpoint
-    * file manager, like the kill/restart specs and every deployment.
-    * Its settings live in a CLONED session (same SparkContext, own SQL
+    * The replay runs on Spark's default state store, like the
+    * kill/restart specs and every deployment, and checkpoints through
+    * [[LocalCheckpointFileManager]] like the per-pair streams. Its
+    * settings live in a CLONED session (same SparkContext, own SQL
     * conf/catalog), so queries planned concurrently on the caller's
     * session keep theirs. */
   private[graft] def replayChunked[T](spark: SparkSession, rows: Array[T],
@@ -416,6 +479,7 @@ object StreamingOps extends Serializable {
       flushRows: Seq[T] = Nil)
       (implicit enc: org.apache.spark.sql.Encoder[T]): DataFrame = {
     val replaySpark = spark.newSession()
+    useLocalCheckpoints(replaySpark)
     // state-store partitions are fixed at query start from the shuffle
     // width, and every partition loads and commits its store on every
     // micro-batch even when empty, so a bounded replay keeps it small.
@@ -425,15 +489,17 @@ object StreamingOps extends Serializable {
     // and commit logs drop all but the last two batches as it goes,
     // which keeps the RAM-disk checkpoint below bounded at any nChunks
     replaySpark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    // every processAllAvailable otherwise appends a NO-DATA trigger
-    // (watermark-application batch) after each data batch — a full
-    // state-store load/commit cycle that roughly doubles the trigger
-    // count. The replay design never needs them: watermark-driven
-    // emission is handled by the TWO flush sentinels (flush №2's data
-    // batch applies the watermark advanced by flush №1), which is why
-    // there are two. Deployments keep the default — a live stream has
-    // no sentinel rows, so idle watermark progress needs no-data
-    // batches there.
+    // a stateful operator whose output waits on the watermark (an
+    // event-time timeout such as tradesStream's, an append-mode window)
+    // asks for a NO-DATA trigger after each batch that moves the
+    // watermark: a full state-store load/commit cycle with no input.
+    // The replay never needs one: watermark-driven emission is handled
+    // by the TWO flush sentinels (flush №2's data batch applies the
+    // watermark advanced by flush №1), which is why there are two.
+    // Operators without a timeout (l1Stream, l2Stream, orderTypeStream
+    // without a TTL) never ask, so this changes nothing for them.
+    // Deployments keep the default — a live stream has no sentinel
+    // rows, so idle watermark progress needs no-data batches there.
     replaySpark.conf.set(
       "spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // the checkpoint (offset WAL, commit log, state-store deltas) is

@@ -1370,4 +1370,98 @@ class StreamingSpec extends AnyFunSuite {
     assert(boom.getMessage === "build failed")
     assert(checkpoints() === before)
   }
+
+  test("l1Stream and l2Stream drop an event behind the watermark") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val t0 = 1700000000000000L // µs
+    val hour = 3600L * 1000000L
+    val open = Seq(
+      BookEvent(1, t0, 1L, "b", 100.0, 1.0, false),
+      BookEvent(1, t0, 2L, "s", 101.0, 1.0, false))
+    // moves the watermark to t0 + 1 h - 2 min
+    val later = Seq(BookEvent(1, t0 + hour, 3L, "b", 99.0, 2.0, false))
+    // about 1 h behind that watermark; would raise the best bid
+    val late = Seq(BookEvent(1, t0 + 10000000L, 4L, "b", 100.5, 3.0, false))
+    val after = Seq(BookEvent(1, t0 + hour + 1000000L, 3L, "b", 99.0, 2.0,
+      true))
+
+    def run(stream: (org.apache.spark.sql.Dataset[BookEvent],
+        SparkSession) => org.apache.spark.sql.DataFrame, name: String,
+        batches: Seq[Seq[BookEvent]]): List[Seq[Any]] = {
+      val ms = MemoryStream[BookEvent](spark)
+      val q = stream(ms.toDS(), spark).writeStream.outputMode("append")
+        .format("memory").queryName(name).start()
+      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      val rows = spark.table(name).collect().map(_.toSeq).toList
+      spark.catalog.dropTempView(name)
+      rows.sortBy(_.mkString("|"))
+    }
+    for ((stream, kind) <- Seq(
+        (StreamingOps.l1Stream _, "l1"), (StreamingOps.l2Stream _, "l2"))) {
+      val onTime = run(stream, s"late_${kind}_without",
+        Seq(open, later, after))
+      val withLate = run(stream, s"late_${kind}_with",
+        Seq(open, later, late, after))
+      assert(onTime.nonEmpty)
+      assert(withLate === onTime, s"$kind applied a late event")
+    }
+  }
+
+  test("l1Stream triggers on a file: checkpoint start no child process") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import jdk.jfr.consumer.RecordingStream
+    // loading Hadoop's Shell class starts one `setsid` probe per JVM;
+    // load it before recording, as any earlier Hadoop use would have
+    Class.forName("org.apache.hadoop.util.Shell")
+    // (command, starting thread) of every process the JVM starts
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val rs = new RecordingStream()
+    rs.enable("jdk.ProcessStart")
+    rs.onEvent("jdk.ProcessStart", e => {
+      starts.add((e.getString("command"),
+        Option(e.getThread).map(_.getJavaName).getOrElse("")))
+      ()
+    })
+    rs.startAsync()
+    val sentinel = "true"
+    try {
+      val ckpt = java.nio.file.Files
+        .createTempDirectory("graft-l1-spawn-ckpt").toString
+      val ms = MemoryStream[BookEvent](spark)
+      val q = StreamingOps.l1Stream(ms.toDS(), spark)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("memory").queryName("l1_spawns").start()
+      try (1 to 5).foreach { i =>
+        val ts = 1700000000000000L + i * 1000000L
+        ms.addData(Seq(
+          BookEvent(1, ts, 2L * i, "b", 100.0 + i, 1.0, false),
+          BookEvent(1, ts, 2L * i + 1, "s", 200.0 - i, 1.0, false)))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.table("l1_spawns").count() == 5)
+      spark.catalog.dropTempView("l1_spawns")
+      // a process of the test's own: once the recording delivers it,
+      // it has delivered every process started before it
+      new ProcessBuilder(sentinel).start().waitFor()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!starts.asScala.exists(_._1 == sentinel) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(starts.asScala.exists(_._1 == sentinel),
+        "the recording saw no process start")
+    } finally rs.close()
+    // Spark deletes a garbage-collected session's artifact directory
+    // with `rm -rf` from the JDK's Cleaner thread, whenever a GC runs;
+    // that is not the stream's doing
+    val spawned = starts.asScala.toList.filterNot { case (cmd, thread) =>
+      cmd == sentinel || thread.startsWith("Cleaner-")
+    }
+    assert(spawned.isEmpty,
+      s"${spawned.size} child processes, e.g. ${spawned.take(3)}")
+  }
 }
