@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the library's custom
   * Catalyst expressions for SQL use
@@ -12,31 +12,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * Column API. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("long_array_dot"),
-      new ExpressionInfo(classOf[LongArrayDot].getName, "long_array_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LongArrayDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("string_poly_hash"),
-      new ExpressionInfo(classOf[StringPolyHash].getName, "string_poly_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        StringPolyHash(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("long_array_max_abs"),
-      new ExpressionInfo(classOf[LongArrayMaxAbs].getName, "long_array_max_abs"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LongArrayMaxAbs(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("quantize_int8"),
-      new ExpressionInfo(classOf[QuantizeInt8].getName, "quantize_int8"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        QuantizeInt8(exprs(0))))
-    e.injectFunction((
-      new FunctionIdentifier("float_array_milli"),
-      new ExpressionInfo(classOf[FloatArrayMilli].getName, "float_array_milli"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatArrayMilli(exprs(0))))
+    GraftExtensions.scalars.foreach { case (name, cls, builder) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     // band joins (abs(l.ts - r.ts) <= c) rewrite to bucketed equi joins
     e.injectOptimizerRule(_ => graft.plans.BandJoinRule)
     // the AsOfJoin logical operator lowers to the slice-parallel
@@ -50,133 +29,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectTableFunction((
       new FunctionIdentifier("asof_join"),
       new ExpressionInfo(classOf[graft.plans.AsOfJoin].getName, "asof_join"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+      (exprs: Seq[Expression]) =>
         graft.plans.AsOfJoinOps.sqlTableFunction(exprs)))
     e.injectResolutionRule(_ => graft.plans.AsOfJoinResolution)
-    // the engine's primary entry points as SQL table functions:
-    // SELECT * FROM depth('l3', s, e) / spread('l3') / events('l3', s, e)
-    // — macro-expanded at resolution time to the exact GraftApi plans
-    e.injectTableFunction((
-      new FunctionIdentifier("depth"),
-      new ExpressionInfo(
-        graft.plans.GraftTableFunctions.getClass.getName, "depth"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.GraftTableFunctions.depthTvf(exprs)))
-    e.injectTableFunction((
-      new FunctionIdentifier("spread"),
-      new ExpressionInfo(
-        graft.plans.GraftTableFunctions.getClass.getName, "spread"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.GraftTableFunctions.spreadTvf(exprs)))
-    e.injectTableFunction((
-      new FunctionIdentifier("events"),
-      new ExpressionInfo(
-        graft.plans.GraftTableFunctions.getClass.getName, "events"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.GraftTableFunctions.eventsTvf(exprs)))
-    e.injectTableFunction((
-      new FunctionIdentifier("trades"),
-      new ExpressionInfo(
-        graft.plans.GraftTableFunctions.getClass.getName, "trades"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.GraftTableFunctions.tradesTvf(exprs)))
-    e.injectTableFunction((
-      new FunctionIdentifier("order_book"),
-      new ExpressionInfo(
-        graft.plans.GraftTableFunctions.getClass.getName, "order_book"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.GraftTableFunctions.orderBookTvf(exprs)))
-    // the grid entry points (reference get.queues / get.depth_summary)
-    e.injectTableFunction((
-      new FunctionIdentifier("queues"),
-      new ExpressionInfo(
-        graft.plans.GraftTableFunctions.getClass.getName, "queues"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.GraftTableFunctions.queuesTvf(exprs)))
-    e.injectTableFunction((
-      new FunctionIdentifier("depth_summary"),
-      new ExpressionInfo(
-        graft.plans.GraftTableFunctions.getClass.getName, "depth_summary"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.plans.GraftTableFunctions.depthSummaryTvf(exprs)))
-    // the sequential / analytics entry points, completing the surface:
-    // every reference get.* function is now reachable from SQL text
-    val more: Seq[(String,
-        Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] = Seq(
-      "queues_wide" -> graft.plans.GraftTableFunctions.queuesWideTvf _,
-      "depth_resample" -> graft.plans.GraftTableFunctions.depthResampleTvf _,
-      "trading_period" -> graft.plans.GraftTableFunctions.tradingPeriodTvf _,
-      "trading_strategy" ->
-        graft.plans.GraftTableFunctions.tradingStrategyTvf _,
-      "draws" -> graft.plans.GraftTableFunctions.drawsTvf _,
-      "events_intervals" ->
-        graft.plans.GraftTableFunctions.eventsIntervalsTvf _,
-      "summary" -> graft.plans.GraftTableFunctions.summaryTvf _,
-      "export" -> graft.plans.GraftTableFunctions.exportTvf _,
-      "plot_avail" -> graft.plans.GraftTableFunctions.plotAvailTvf _,
-      "plot_trellis" -> graft.plans.GraftTableFunctions.plotTrellisTvf _,
-      // the training-data pipeline surface from SQL text too
-      "bm25" -> graft.plans.GraftTableFunctions.bm25Tvf _,
-      "dedup_exact" -> graft.plans.GraftTableFunctions.dedupExactTvf _,
-      "dup_ngrams" -> graft.plans.GraftTableFunctions.dupNgramsTvf _,
-      "quality" -> graft.plans.GraftTableFunctions.qualityTvf _,
-      "source_drift" ->
-        graft.plans.GraftTableFunctions.sourceDriftTvf _,
-      "boilerplate" ->
-        graft.plans.GraftTableFunctions.boilerplateTvf _,
-      "substring_dedup" ->
-        graft.plans.GraftTableFunctions.substringDedupTvf _,
-      "dsir" -> graft.plans.GraftTableFunctions.dsirTvf _,
-      "lm_score" -> graft.plans.GraftTableFunctions.lmScoreTvf _,
-      "nb_lang" -> graft.plans.GraftTableFunctions.nbLangTvf _,
-      "tfidf_terms" -> graft.plans.GraftTableFunctions.tfidfTermsTvf _,
-      "decon_bloom" -> graft.plans.GraftTableFunctions.deconBloomTvf _,
-      "dedup_audit" -> graft.plans.GraftTableFunctions.dedupAuditTvf _,
-      "pack_stats" -> graft.plans.GraftTableFunctions.packStatsTvf _,
-      "cms_heavy" -> graft.plans.GraftTableFunctions.cmsHeavyTvf _,
-      "rproj" -> graft.plans.GraftTableFunctions.rprojTvf _,
-      "pmi_bigrams" -> graft.plans.GraftTableFunctions.pmiBigramsTvf _,
-      "dedup_recall" -> graft.plans.GraftTableFunctions.dedupRecallTvf _,
-      "funnel" -> graft.plans.GraftTableFunctions.funnelTvf _,
-      "sessions" -> graft.plans.GraftTableFunctions.sessionsTvf _,
-      "retention" -> graft.plans.GraftTableFunctions.retentionTvf _,
-      "anomaly" -> graft.plans.GraftTableFunctions.anomalyTvf _,
-      "source_cap" -> graft.plans.GraftTableFunctions.sourceCapTvf _,
-      "epoch_plan" -> graft.plans.GraftTableFunctions.epochPlanTvf _,
-      "pagerank" -> graft.plans.GraftTableFunctions.pageRankTvf _,
-      "label_prop" -> graft.plans.GraftTableFunctions.labelPropTvf _,
-      "gram" -> graft.plans.GraftTableFunctions.gramTvf _,
-      "pca" -> graft.plans.GraftTableFunctions.pcaTvf _,
-      "pca2" -> graft.plans.GraftTableFunctions.pca2Tvf _,
-      "pca_project" ->
-        graft.plans.GraftTableFunctions.pcaProjectTvf _,
-      "cluster_sample" ->
-        graft.plans.GraftTableFunctions.clusterSampleTvf _,
-      "quantiles" -> graft.plans.GraftTableFunctions.quantilesTvf _,
-      "knn_graph" -> graft.plans.GraftTableFunctions.knnGraphTvf _,
-      "char_span_dedup" ->
-        graft.plans.GraftTableFunctions.charSpanDedupTvf _,
-      "knn_clusters" ->
-        graft.plans.GraftTableFunctions.knnClustersTvf _,
-      "semdedup" -> graft.plans.GraftTableFunctions.semDedupTvf _,
-      "triangles" -> graft.plans.GraftTableFunctions.trianglesTvf _,
-      "incr_ann" -> graft.plans.GraftTableFunctions.incrAnnTvf _,
-      "ann_drift" -> graft.plans.GraftTableFunctions.annDriftTvf _,
-      "sem_decon" -> graft.plans.GraftTableFunctions.semDeconTvf _,
-      "sem_decon_ivf" -> graft.plans.GraftTableFunctions.semDeconIvfTvf _,
-      "hybrid" -> graft.plans.GraftTableFunctions.hybridTvf _,
-      "source_distinct" ->
-        graft.plans.GraftTableFunctions.sourceDistinctTvf _,
-      "weighted_sample" ->
-        graft.plans.GraftTableFunctions.weightedSampleTvf _)
-    more.foreach { case (name, builder) =>
-      e.injectTableFunction((
-        new FunctionIdentifier(name),
+    // every entry of the table-function table — the reference get.*
+    // entry points, the grid/sequential operators and the pipeline —
+    // macro-expanded at resolution time to the exact Scala API plan
+    graft.plans.GraftTableFunctions.all.foreach { f =>
+      e.injectTableFunction((new FunctionIdentifier(f.name),
         new ExpressionInfo(
-          graft.plans.GraftTableFunctions.getClass.getName, name),
-        builder))
+          graft.plans.GraftTableFunctions.getClass.getName, f.name),
+        f.parse _))
     }
     e.injectResolutionRule(_ => graft.plans.GraftCallResolution)
   }
+}
+
+object GraftExtensions {
+  /** The custom scalar expressions: (SQL name, class, builder). */
+  private val scalars: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq(
+      ("long_array_dot", classOf[LongArrayDot],
+        exprs => LongArrayDot(exprs(0), exprs(1))),
+      ("string_poly_hash", classOf[StringPolyHash],
+        exprs => StringPolyHash(exprs(0))),
+      ("long_array_max_abs", classOf[LongArrayMaxAbs],
+        exprs => LongArrayMaxAbs(exprs(0))),
+      ("quantize_int8", classOf[QuantizeInt8],
+        exprs => QuantizeInt8(exprs(0))),
+      ("float_array_milli", classOf[FloatArrayMilli],
+        exprs => FloatArrayMilli(exprs(0))))
 }

@@ -1,331 +1,97 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-/** SQL table-function surface for the engine's primary entry points —
-  * the reference's `get.depth` / `get.spread` (`level1`) / `get.events`
-  * (`db/get_schema.sql:239,645,304`) reachable from plain SQL text:
-  *
-  * {{{
-  *   SELECT * FROM depth('l3_view', 1000000, 2000000)
-  *   SELECT * FROM spread('l3_view')
-  *   SELECT * FROM events('l3_view', 1000000, 2000000)
-  * }}}
-  *
-  * Each parses to an [[UnresolvedGraftCall]] marker over an
-  * `UnresolvedRelation` of the named level3 table; once the relation
-  * resolves, [[GraftCallResolution]] expands the marker into the SAME
-  * plan the Scala `GraftApi` method builds (macro expansion at
-  * resolution time — the proven [[UnresolvedAsOfJoin]] mechanism). SQL
-  * users therefore get the identical scalable physical shape: the
-  * sliced replay kernel, the as-of carry, never a one-task window.
-  *
-  * Unlike `asof_join` (a reusable *operator* with its own logical
-  * node), these are query macros: nothing downstream needs to pattern-
-  * match on them, so expanding directly to the API plan is the whole
-  * implementation.
-  */
-case class UnresolvedGraftCall(child: LogicalPlan, kind: String,
-    longArgs: Seq[Long], strArgs: Seq[String] = Nil,
-    dblArgs: Seq[Double] = Nil) extends UnaryNode {
-  override lazy val resolved: Boolean = false
-  override def output: Seq[Attribute] = Nil
-  override protected def withNewChildInternal(
-      newChild: LogicalPlan): LogicalPlan = copy(child = newChild)
+/** Kind of a table-function argument; every argument is a literal. */
+sealed trait TvfArg
+
+object TvfArg {
+  /** A table name (string literal), resolved as the marker's child. */
+  case object Rel extends TvfArg
+  case object Integral extends TvfArg
+  case object Numeric extends TvfArg
+  case object Str extends TvfArg
 }
 
-/** Two-relation variant of [[UnresolvedGraftCall]] for TVFs whose
-  * operator joins DISTINCT tables (hybrid retrieval reads documents
-  * AND embeddings). */
-case class UnresolvedGraftCall2(left: LogicalPlan, right: LogicalPlan,
-    kind: String, longArgs: Seq[Long]) extends BinaryNode {
+/** A call's checked arguments in call order (index 0 is the first
+  * argument, a table name), with its resolved relations. */
+final class TvfCall(val spark: SparkSession, val rels: Seq[DataFrame],
+    args: Seq[Any]) {
+  def rel: DataFrame = rels.head
+  lazy val api: graft.GraftApi = new graft.GraftApi(spark, rel)
+  def has(i: Int): Boolean = i < args.length
+  def long(i: Int): Long = args(i).asInstanceOf[Long]
+  def long(i: Int, default: Long): Long = if (has(i)) long(i) else default
+  def int(i: Int): Int = long(i).toInt
+  def int(i: Int, default: Int): Int = if (has(i)) int(i) else default
+  def dbl(i: Int): Double = args(i).asInstanceOf[Double]
+  def dbl(i: Int, default: Double): Double = if (has(i)) dbl(i) else default
+  def str(i: Int): String = args(i).asInstanceOf[String]
+  def str(i: Int, default: String): String = if (has(i)) str(i) else default
+}
+
+/** One SQL table function: `usage` is the arity error message, `kinds`
+  * gives the kind of each argument position, and `lower` builds the
+  * function's plan from a resolved call. */
+final class TvfDef(val name: String, params: String, val arities: Seq[Int],
+    val kinds: Seq[TvfArg], val lower: TvfCall => DataFrame) {
+  require(kinds.length == arities.max && kinds.head == TvfArg.Rel,
+    s"$name: one kind per argument, the first a table name")
+
+  def usage: String = s"$name takes $params"
+
+  /** The table-function builder: arity and literal checks in call
+    * order, then the marker over the named relations. */
+  def parse(exprs: Seq[Expression]): LogicalPlan = {
+    require(arities.contains(exprs.length), usage)
+    val args: Seq[Any] = exprs.indices.map { i =>
+      kinds(i) match {
+        case TvfArg.Rel | TvfArg.Str => TvfArgs.strLit(exprs, i, name)
+        case TvfArg.Integral => TvfArgs.longLit(exprs, i, name)
+        case TvfArg.Numeric => TvfArgs.dblLit(exprs, i, name)
+      }
+    }
+    UnresolvedGraftCall(this, args, args.indices
+      .filter(kinds(_) == TvfArg.Rel).map(i => TvfArgs.rel(args(i).toString)))
+  }
+
+  override def toString: String = name
+}
+
+/** Parse-time marker of a table-function call over its one or two
+  * relations; [[GraftCallResolution]] replaces it with the lowered plan. */
+case class UnresolvedGraftCall(fn: TvfDef, args: Seq[Any],
+    children: Seq[LogicalPlan]) extends LogicalPlan {
   override lazy val resolved: Boolean = false
   override def output: Seq[Attribute] = Nil
   override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): LogicalPlan =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[LogicalPlan]): LogicalPlan =
+    copy(children = newChildren)
 }
 
 /** Analyzer rule (injected via `GraftExtensions.injectResolutionRule`):
-  * expands a [[UnresolvedGraftCall]] to the corresponding `GraftApi`
-  * plan once its level3 relation is resolved. */
+  * applies an [[UnresolvedGraftCall]]'s lowering once its relations
+  * are resolved. */
 object GraftCallResolution extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp {
-      case u: UnresolvedGraftCall2 if u.childrenResolved =>
-        val spark = SparkSession.active
-        val docs = PlanBridge.ofRows(spark, u.left)
-        val emb = PlanBridge.ofRows(spark, u.right)
-        val df = u.kind match {
-          case "hybrid" =>
-            // in-query recompute route (the TVF idiom — training is
-            // the session memo); the API row (`pipe_hybrid_search`)
-            // is the stored-index serving shape
-            graft.pipeline.Search.hybridSearch(docs, emb,
-              k = if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 5,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(emb)),
-              nProbe =
-                if (u.longArgs.length > 1) u.longArgs(1).toInt else 1)
-          case other => throw new IllegalStateException(
-            s"unknown two-relation graft table function: $other")
-        }
-        PlanBridge.plan(df)
       case u: UnresolvedGraftCall if u.childrenResolved =>
         val spark = SparkSession.active
-        val l3 = PlanBridge.ofRows(spark, u.child)
-        val api = new graft.GraftApi(spark, l3)
-        val df = u.kind match {
-          case "depth" if u.strArgs.nonEmpty =>
-            api.depth(u.longArgs(0), u.longArgs(1), u.strArgs(0))
-          case "depth" => api.depth(u.longArgs(0), u.longArgs(1))
-          case "spread" if u.longArgs.nonEmpty =>
-            api.spreadResampled(u.longArgs(0))
-          case "spread" => api.spread()
-          case "events" if u.longArgs.length > 2 =>
-            api.events(u.longArgs(0), u.longArgs(1),
-              frequencyMicros = Some(u.longArgs(2)))
-          case "events" => api.events(u.longArgs(0), u.longArgs(1))
-          case "trades" => api.trades()
-          case "order_book" => api.orderBook(u.longArgs(0))
-          case "queues" =>
-            val instants = GraftTableFunctions.gridInstants(
-              u.longArgs(0), u.longArgs(1), u.longArgs(2))
-            val firstTick = u.longArgs(3).toInt
-            val nTicks = u.longArgs(4).toInt - firstTick + 1
-            val tickSize = u.dblArgs(0)
-            u.strArgs.headOption.getOrElse("ABSOLUTE").toUpperCase match {
-              case "ABSOLUTE" => graft.market.GridOps.queues(
-                l3, instants, tickSize, firstTick, nTicks)
-              case "LOGRELATIVE" => graft.market.GridOps.queuesLogRelative(
-                l3, instants, tickSize, firstTick, nTicks)
-              case other => throw new IllegalArgumentException(
-                s"queues tick_type must be ABSOLUTE or LOGRELATIVE, got $other")
-            }
-          case "depth_summary" =>
-            val instants = GraftTableFunctions.gridInstants(
-              u.longArgs(0), u.longArgs(1), u.longArgs(2))
-            graft.market.GridOps.depthSummary(l3, instants,
-              u.longArgs(3).toInt, u.longArgs(4).toInt)
-          case "queues_wide" =>
-            val instants = GraftTableFunctions.gridInstants(
-              u.longArgs(0), u.longArgs(1), u.longArgs(2))
-            api.queuesWide(instants, u.dblArgs(0), u.longArgs(3).toInt)
-          case "depth_resample" =>
-            val instants = GraftTableFunctions.gridInstants(
-              u.longArgs(0), u.longArgs(1), u.longArgs(2))
-            graft.market.GridOps.depthResample(l3, instants, u.dblArgs(0))
-          case "trading_period" => api.tradingPeriod(u.longArgs(0))
-          case "trading_strategy" =>
-            api.tradingStrategy(u.dblArgs(0), u.dblArgs(1))
-          case "draws" => api.epsilonDrawUpDowns(u.dblArgs(0))
-          case "events_intervals" =>
-            api.intervals(u.longArgs.headOption.getOrElse(0L))
-          case "summary" => api.summary()
-          case "export" => api.export()
-          case "plot_avail" =>
-            api.dataAvailabilityGrid(u.longArgs.headOption.getOrElse(0L))
-          case "plot_trellis" =>
-            api.positionTrellis(
-              phi = if (u.dblArgs.nonEmpty) u.dblArgs(0) else 0.5,
-              rho = if (u.dblArgs.nonEmpty) u.dblArgs(1) else 1e-6,
-              volumeUnits = u.longArgs.headOption.getOrElse(50L))
-          // pipeline surface (the relation is a DOCUMENTS table here,
-          // not level3 — the marker mechanism is source-agnostic)
-          case "bm25" =>
-            graft.pipeline.Search.bm25TopK(l3,
-              if (u.strArgs.nonEmpty) Seq(1L -> u.strArgs.head)
-              else graft.pipeline.Search.Bm25Queries,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 5)
-          case "dedup_exact" =>
-            graft.pipeline.TextPipeline.exactDedup(l3)
-          case "dup_ngrams" =>
-            graft.pipeline.TextPipeline.interDocDupNgrams(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 5)
-          case "quality" =>
-            graft.pipeline.TextPipeline.qualityScore(l3)
-          case "source_drift" =>
-            graft.pipeline.TextPipeline.sourceDrift(l3)
-          case "boilerplate" =>
-            graft.pipeline.TextPipeline.boilerplateRemove(l3,
-              if (u.longArgs.nonEmpty) u.longArgs(0).toInt else 10,
-              if (u.longArgs.length > 1) u.longArgs(1) else 1L)
-          case "substring_dedup" =>
-            graft.pipeline.TextPipeline.substringDedup(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 8)
-          case "char_span_dedup" =>
-            graft.pipeline.TextPipeline.charSpanDedup(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 24)
-          case "dsir" =>
-            graft.pipeline.TextPipeline.dsirWeights(l3,
-              targetLang = u.strArgs.headOption.getOrElse("en"))
-          case "lm_score" =>
-            graft.pipeline.TextPipeline.lmScore(l3,
-              trainLang = u.strArgs.headOption.getOrElse("en"))
-          case "nb_lang" =>
-            graft.pipeline.TextPipeline.nbLangClassify(l3)
-          case "tfidf_terms" =>
-            graft.pipeline.TextPipeline.tfidfTerms(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 3)
-          case "decon_bloom" =>
-            graft.pipeline.TextPipeline.decontaminateBloom(l3)
-          case "dedup_audit" =>
-            graft.pipeline.TextPipeline.dedupAudit(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 20)
-          case "pack_stats" =>
-            graft.pipeline.TrainingData.packStats(l3, spark,
-              if (u.longArgs.nonEmpty) u.longArgs(0) else 256L,
-              if (u.longArgs.length > 1) u.longArgs(1).toInt else 16)
-          case "cms_heavy" =>
-            graft.pipeline.TextPipeline.cmsHeavyHitters(l3,
-              if (u.longArgs.nonEmpty) u.longArgs(0).toInt else 3,
-              if (u.longArgs.length > 1) u.longArgs(1).toInt else 512,
-              if (u.longArgs.length > 2) u.longArgs(2).toInt else 20)
-          case "rproj" =>
-            graft.pipeline.VectorOps.rprojReport(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 16)
-          case "pmi_bigrams" =>
-            graft.pipeline.TextPipeline.pmiBigrams(l3,
-              if (u.longArgs.nonEmpty) u.longArgs(0) else 5L,
-              if (u.longArgs.length > 1) u.longArgs(1).toInt else 20)
-          case "dedup_recall" =>
-            graft.pipeline.TextPipeline.dedupRecall(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 2,
-              if (u.dblArgs.nonEmpty) u.dblArgs.head else 0.5)
-          case "funnel" =>
-            graft.relational.CoreQueries.funnelOf(l3.select(
-              col("user_id"), col("event_type"),
-              graft.Tables.tsMicros(col("ts")).as("t")))
-          case "sessions" =>
-            graft.relational.CoreQueries.sessionizeOf(l3.select(
-              col("user_id"), col("event_id"),
-              graft.Tables.tsMicros(col("ts")).as("t")))
-          case "retention" =>
-            graft.relational.CoreQueries.retentionOf(l3.select(
-              col("user_id"), graft.Tables.tsMicros(col("ts")).as("t")))
-          case "anomaly" =>
-            graft.relational.CoreQueries.eventAnomaliesOf(l3)
-          case "source_cap" =>
-            graft.pipeline.TextPipeline.sourceCap(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 10)
-          case "epoch_plan" =>
-            graft.pipeline.TrainingData.epochPlan(l3,
-              if (u.longArgs.nonEmpty) u.longArgs(0).toInt else 7,
-              if (u.longArgs.length > 1) u.longArgs(1).toInt else 4,
-              if (u.longArgs.length > 2) u.longArgs(2).toInt else 2)
-          case "pagerank" =>
-            graft.pipeline.VectorOps.pageRank(l3,
-              if (u.longArgs.nonEmpty) u.longArgs(0).toInt else 5,
-              iters =
-                if (u.longArgs.length > 1) u.longArgs(1).toInt else 8,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)))
-          case "label_prop" =>
-            graft.pipeline.VectorOps.labelPropagate(l3,
-              if (u.longArgs.nonEmpty) u.longArgs(0).toInt else 5,
-              iters =
-                if (u.longArgs.length > 1) u.longArgs(1).toInt else 3,
-              seedMod =
-                if (u.longArgs.length > 2) u.longArgs(2).toInt else 10,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)))
-          case "gram" =>
-            graft.pipeline.VectorOps.gramMatrix(l3)
-          case "pca" =>
-            graft.pipeline.VectorOps.pcaLeading(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 12)
-          case "pca2" =>
-            graft.pipeline.VectorOps.pcaSecond(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 12)
-          case "pca_project" =>
-            graft.pipeline.VectorOps.pcaProject(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 12)
-          case "cluster_sample" =>
-            graft.pipeline.VectorOps.clusterSample(l3,
-              perCell =
-                if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 8,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)))
-          case "quantiles" =>
-            graft.pipeline.TextPipeline.lengthQuantiles(l3)
-          case "knn_graph" =>
-            graft.pipeline.VectorOps.knnGraph(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 5,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)),
-              nProbe =
-                if (u.longArgs.length > 1) u.longArgs(1).toInt else 1)
-          case "knn_clusters" =>
-            graft.pipeline.VectorOps.knnClusters(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 5,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)))
-          case "semdedup" =>
-            graft.pipeline.VectorOps.semDedup(l3,
-              if (u.dblArgs.nonEmpty) u.dblArgs.head else 0.45,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)))
-          case "triangles" =>
-            graft.pipeline.VectorOps.triangleStats(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 5,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)))
-          case "sem_decon" =>
-            graft.pipeline.VectorOps.semDecon(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head else 10L,
-              if (u.dblArgs.nonEmpty) u.dblArgs.head else 0.4)
-          case "sem_decon_ivf" =>
-            graft.pipeline.VectorOps.semDeconIvf(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head else 10L,
-              if (u.dblArgs.nonEmpty) u.dblArgs.head else 0.4,
-              trainedCents =
-                Some(graft.pipeline.VectorOps.ivfTrainCached(l3)))
-          case "ann_drift" =>
-            // same base/batch split as incr_ann; the gauge compares
-            // the batch's cell histogram to the base index's
-            val adBase = l3.filter(col("vec_id") % 4 =!= 0)
-            val adCents =
-              graft.pipeline.VectorOps.ivfTrainCached(adBase)
-            graft.pipeline.VectorOps.ivfCellDrift(
-              graft.pipeline.VectorOps.ivfAssignments(adBase, adCents),
-              graft.pipeline.VectorOps.ivfAssignments(
-                l3.filter(col("vec_id") % 4 === 0), adCents))
-          case "incr_ann" =>
-            // base (% 4 ≠ 0) = the already-indexed corpus; batch = the
-            // ingest. Training is the session-memoized artifact
-            // (ivfTrainCached); the base assignment is recomputed
-            // in-query here — the API row (`pipe_incr_ann`) is the
-            // lake-serving shape that reads the stored postings
-            val annBase = l3.filter(col("vec_id") % 4 =!= 0)
-            val annCents =
-              graft.pipeline.VectorOps.ivfTrainCached(annBase)
-            graft.pipeline.VectorOps.incrAnnAssign(
-              l3.filter(col("vec_id") % 4 === 0), annCents,
-              graft.pipeline.VectorOps.ivfAssignments(annBase, annCents))
-          case "source_distinct" =>
-            graft.pipeline.TextPipeline.sourceDistinctEstimate(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 64)
-          case "weighted_sample" =>
-            graft.pipeline.TrainingData.weightedSample(l3,
-              if (u.longArgs.nonEmpty) u.longArgs.head.toInt else 50,
-              u.strArgs.headOption.getOrElse("sample0"))
-          case other => throw new IllegalStateException(
-            s"unknown graft table function: $other")
-        }
-        PlanBridge.plan(df)
+        PlanBridge.plan(u.fn.lower(new TvfCall(spark,
+          u.children.map(PlanBridge.ofRows(spark, _)), u.args)))
     }
 }
 
 /** Shared literal-argument extraction for every injected table
-  * function (`asof_join`, `depth`, `spread`, `events`): one place for
-  * the foldable/type/null validation and the dotted-name relation
-  * builder, so a parsing fix reaches every TVF. */
+  * function (`asof_join` and each [[TvfDef]] entry): one place for the
+  * foldable/type/null validation and the dotted-name relation builder,
+  * so a parsing fix reaches every TVF. */
 private[plans] object TvfArgs {
 
   def strLit(exprs: Seq[Expression], i: Int, fn: String): String = {
@@ -343,7 +109,7 @@ private[plans] object TvfArgs {
     require(e.foldable && (e.dataType ==
       org.apache.spark.sql.types.LongType ||
       e.dataType == org.apache.spark.sql.types.IntegerType),
-      s"$fn argument ${i + 1} must be an integral literal (epoch µs)")
+      s"$fn argument ${i + 1} must be an integral literal")
     val v = e.eval(null)
     require(v != null, s"$fn argument ${i + 1} must not be null")
     v.asInstanceOf[Number].longValue()
@@ -366,56 +132,39 @@ private[plans] object TvfArgs {
   }
 }
 
-/** Parse-time builders behind the registered table functions. */
+/** SQL table-function surface: the reference's `get.*` entry points
+  * (`db/get_schema.sql`), the grid and sequential operators and the
+  * curation pipeline, reachable from plain SQL text:
+  *
+  * {{{
+  *   SELECT * FROM depth('l3_view', 1000000, 2000000)
+  *   SELECT * FROM spread('l3_view')
+  *   SELECT * FROM hybrid('docs', 'emb', 5)
+  * }}}
+  *
+  * Each function is ONE [[TvfDef]] entry of [[all]], which
+  * `GraftExtensions` registers in one loop: its name, usage line,
+  * accepted arities, the kind of each argument and its lowering to the
+  * Scala call. [[TvfDef.parse]] checks a call's
+  * literals against the entry and returns an [[UnresolvedGraftCall]]
+  * marker over `UnresolvedRelation`s of the named tables; once they
+  * resolve, [[GraftCallResolution]] applies the entry's lowering, which
+  * builds the SAME plan the Scala `GraftApi` / `GridOps` / pipeline
+  * method builds (macro expansion at resolution time — the proven
+  * [[UnresolvedAsOfJoin]] mechanism). SQL users therefore get the
+  * identical scalable physical shape: the sliced replay kernel, the
+  * as-of carry, never a one-task window.
+  *
+  * Unlike `asof_join` (a reusable *operator* with its own logical
+  * node), these are query macros: nothing downstream needs to pattern-
+  * match on them, so expanding directly to the API plan is the whole
+  * implementation.
+  */
 object GraftTableFunctions {
-  import TvfArgs.{dblLit, longLit, rel, strLit}
-
-  /** `depth('l3', start_us, end_us[, precision])` — `GraftApi.depth`;
-    * the optional 4th argument is a precision tier (`'r0'|'p0'..'p4'`,
-    * the reference's `get.depth` precision parameter). */
-  def depthTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 3 || exprs.length == 4,
-      "depth takes (level3_table, start_us, end_us[, precision])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "depth")), "depth",
-      Seq(longLit(exprs, 1, "depth"), longLit(exprs, 2, "depth")),
-      if (exprs.length == 4) Seq(strLit(exprs, 3, "depth")) else Nil)
-  }
-
-  /** `spread('l3'[, freq_us])` — `GraftApi.spread`, or
-    * `GraftApi.spreadResampled` when the optional grid frequency is
-    * given (the reference's `p_frequency`). */
-  def spreadTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "spread takes (level3_table[, freq_us])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "spread")), "spread",
-      if (exprs.length == 2) Seq(longLit(exprs, 1, "spread")) else Nil)
-  }
-
-  /** `events('l3', start_us, end_us[, freq_us])` — `GraftApi.events`;
-    * the optional 4th argument is the reference's `p_frequency`
-    * (`db/get_schema.sql:307,339-341`): the prevailing spread becomes
-    * the grid-resampled L1 stream. */
-  def eventsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 3 || exprs.length == 4,
-      "events takes (level3_table, start_us, end_us[, freq_us])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "events")), "events",
-      Seq(longLit(exprs, 1, "events"), longLit(exprs, 2, "events")) ++
-        (if (exprs.length == 4) Seq(longLit(exprs, 3, "events")) else Nil))
-  }
-
-  /** `trades('l3')` — `GraftApi.trades` (the inferred/matched trades). */
-  def tradesTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "trades takes (level3_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "trades")), "trades", Nil)
-  }
-
-  /** `order_book('l3', at_us)` — `GraftApi.orderBook` (liquidity, bps,
-    * levels). */
-  def orderBookTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 2, "order_book takes (level3_table, at_us)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "order_book")), "order_book",
-      Seq(longLit(exprs, 1, "order_book")))
-  }
+  import TvfArg._
+  import graft.market.GridOps
+  import graft.pipeline.{Search, TextPipeline, TrainingData, VectorOps}
+  import graft.relational.CoreQueries
 
   /** The frequency grid the reference's `(start, end, frequency)`
     * argument triple denotes (`get._date_floor`/`_date_ceiling`,
@@ -427,579 +176,338 @@ object GraftTableFunctions {
     first.to(end, freq)
   }
 
-  /** `queues('l3', start_us, end_us, freq_us, tick_size, first_tick,
-    * last_tick[, tick_type])` — the reference `get.queues` surface
-    * (`db/get_schema.sql:623-630`: same parameter list, minus
-    * pair/exchange which our level3 frame carries as columns);
-    * `tick_type` is `'ABSOLUTE'` (default) or `'LOGRELATIVE'`. Expands
-    * to `GridOps.queues` / `queuesLogRelative` over the frequency
-    * grid. */
-  def queuesTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 7 || exprs.length == 8,
-      "queues takes (level3_table, start_us, end_us, freq_us, " +
-        "tick_size, first_tick, last_tick[, tick_type])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "queues")), "queues",
-      Seq(longLit(exprs, 1, "queues"), longLit(exprs, 2, "queues"),
-        longLit(exprs, 3, "queues"), longLit(exprs, 5, "queues"),
-        longLit(exprs, 6, "queues")),
-      if (exprs.length == 8) Seq(strLit(exprs, 7, "queues")) else Nil,
-      Seq(dblLit(exprs, 4, "queues")))
-  }
+  /** The grid of a call whose arguments 1–3 are start, end, freq. */
+  private def grid(c: TvfCall): Seq[Long] =
+    gridInstants(c.long(1), c.long(2), c.long(3))
 
-  /** `queues_wide('l3', start_us, end_us, freq_us, tick_size,
-    * n_ticks)` — the SRF's own result shape (`ts, bid.price,
-    * ask.price, b[], a[]`): one row per (pair, instant), dense
-    * per-bucket volume arrays. */
-  def queuesWideTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 6,
-      "queues_wide takes (level3_table, start_us, end_us, freq_us, " +
-        "tick_size, n_ticks)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "queues_wide")),
-      "queues_wide",
-      Seq(longLit(exprs, 1, "queues_wide"),
-        longLit(exprs, 2, "queues_wide"),
-        longLit(exprs, 3, "queues_wide"),
-        longLit(exprs, 5, "queues_wide")),
-      Nil, Seq(dblLit(exprs, 4, "queues_wide")))
-  }
+  /** The session-memoized IVF training the vector TVFs share (the TVF
+    * idiom recomputes in-query; training is the session memo). */
+  private def cents(df: DataFrame) = Some(VectorOps.ivfTrainCached(df))
 
-  /** `depth_resample('l3', start_us, end_us, freq_us, tick_size)` —
-    * the client's `depth.resample` regridding over the frequency
-    * grid. */
-  def depthResampleTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 5,
-      "depth_resample takes (level3_table, start_us, end_us, freq_us, " +
-        "tick_size)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "depth_resample")),
-      "depth_resample",
-      Seq(longLit(exprs, 1, "depth_resample"),
-        longLit(exprs, 2, "depth_resample"),
-        longLit(exprs, 3, "depth_resample")),
-      Nil, Seq(dblLit(exprs, 4, "depth_resample")))
-  }
+  private def tvf(name: String, params: String, arities: Seq[Int],
+      kinds: TvfArg*)(lower: TvfCall => DataFrame): TvfDef =
+    new TvfDef(name, params, arities, kinds, lower)
 
-  /** `trading_period('l3', volume_units)` — `GraftApi.tradingPeriod`
-    * (0 = best quotes, the whole-book sentinel = full-book VWAP). */
-  def tradingPeriodTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 2,
-      "trading_period takes (level3_table, volume_units)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "trading_period")),
-      "trading_period", Seq(longLit(exprs, 1, "trading_period")))
-  }
-
-  /** `trading_strategy('l3', phi, rho)` — `GraftApi.tradingStrategy`
-    * (commission and per-second interest as numeric literals). */
-  def tradingStrategyTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 3,
-      "trading_strategy takes (level3_table, phi, rho)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "trading_strategy")),
-      "trading_strategy", Nil, Nil,
-      Seq(dblLit(exprs, 1, "trading_strategy"),
-        dblLit(exprs, 2, "trading_strategy")))
-  }
-
-  /** `draws('l3', epsilon)` — `GraftApi.epsilonDrawUpDowns`. */
-  def drawsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 2, "draws takes (level3_table, epsilon)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "draws")), "draws",
-      Nil, Nil, Seq(dblLit(exprs, 1, "draws")))
-  }
-
-  /** `events_intervals('l3'[, min_duration_us])` —
-    * `GraftApi.intervals` (the reference `p_min_duration`). */
-  def eventsIntervalsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "events_intervals takes (level3_table[, min_duration_us])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "events_intervals")),
-      "events_intervals",
-      if (exprs.length == 2)
-        Seq(longLit(exprs, 1, "events_intervals")) else Nil)
-  }
-
-  /** `plot_avail('l3'[, min_duration_us])` —
-    * `GraftApi.dataAvailabilityGrid` (the plotDataAvailability data
-    * frame). */
-  def plotAvailTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "plot_avail takes (level3_table[, min_duration_us])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "plot_avail")), "plot_avail",
-      if (exprs.length == 2) Seq(longLit(exprs, 1, "plot_avail")) else Nil)
-  }
-
-  /** `plot_trellis('l3'[, phi, rho[, volume_units]])` —
-    * `GraftApi.positionTrellis` (the plotPositionTrellis data frame,
-    * log-relative). */
-  def plotTrellisTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 3 || exprs.length == 4,
-      "plot_trellis takes (level3_table[, phi, rho[, volume_units]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "plot_trellis")),
-      "plot_trellis",
-      if (exprs.length == 4) Seq(longLit(exprs, 3, "plot_trellis")) else Nil,
-      Nil,
-      if (exprs.length >= 3)
-        Seq(dblLit(exprs, 1, "plot_trellis"), dblLit(exprs, 2, "plot_trellis"))
-      else Nil)
-  }
-
-  /** `summary('l3')` — `GraftApi.summary` (per-era feed statistics). */
-  def summaryTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "summary takes (level3_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "summary")), "summary", Nil)
-  }
-
-  /** `export('l3')` — `GraftApi.export` (flat event projection). */
-  def exportTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "export takes (level3_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "export")), "export", Nil)
-  }
-
-  /** `bm25('docs'[, k[, 'query text']])` — keyword retrieval over a
-    * documents table ([[graft.pipeline.Search.bm25TopK]]); with no
-    * query string the default probe set runs. */
-  def bm25Tvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "bm25 takes (docs_table[, k[, query_text]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "bm25")), "bm25",
-      if (exprs.length >= 2) Seq(longLit(exprs, 1, "bm25")) else Nil,
-      if (exprs.length == 3) Seq(strLit(exprs, 2, "bm25")) else Nil)
-  }
-
-  /** `dedup_exact('docs')` — content-hash exact dedup report. */
-  def dedupExactTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "dedup_exact takes (docs_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "dedup_exact")),
-      "dedup_exact", Nil)
-  }
-
-  /** `dup_ngrams('docs'[, n])` — inter-document duplicate n-gram
-    * coverage. */
-  def dupNgramsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "dup_ngrams takes (docs_table[, n])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "dup_ngrams")), "dup_ngrams",
-      if (exprs.length == 2) Seq(longLit(exprs, 1, "dup_ngrams")) else Nil)
-  }
-
-  /** `quality('docs')` — per-document quality signals. */
-  def qualityTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "quality takes (docs_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "quality")), "quality", Nil)
-  }
-
-  /** `source_drift('docs')` — per-source KL(source ‖ corpus) in nano
-    * units ([[graft.pipeline.TextPipeline.sourceDrift]]). */
-  def sourceDriftTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "source_drift takes (docs_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "source_drift")),
-      "source_drift", Nil)
-  }
-
-  /** `boilerplate('docs'[, chunk_words[, max_df]])` — corpus-hot-chunk
-    * removal ([[graft.pipeline.TextPipeline.boilerplateRemove]]). */
-  def boilerplateTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "boilerplate takes (docs_table[, chunk_words[, max_df]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "boilerplate")),
-      "boilerplate",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "boilerplate") })
-  }
-
-  /** `substring_dedup('docs'[, L])` — exact substring dedup report
-    * ([[graft.pipeline.TextPipeline.substringDedup]]). */
-  def substringDedupTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "substring_dedup takes (docs_table[, min_words])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "substring_dedup")),
-      "substring_dedup",
-      if (exprs.length == 2)
-        Seq(longLit(exprs, 1, "substring_dedup")) else Nil)
-  }
-
-  /** `dsir('docs'[, 'target_lang'])` — DSIR importance weights toward
-    * the target-language slice. */
-  def dsirTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "dsir takes (docs_table[, target_lang])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "dsir")), "dsir", Nil,
-      if (exprs.length == 2) Seq(strLit(exprs, 1, "dsir")) else Nil)
-  }
-
-  /** `lm_score('docs'[, 'train_lang'])` — bigram-LM quality score. */
-  def lmScoreTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "lm_score takes (docs_table[, train_lang])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "lm_score")), "lm_score", Nil,
-      if (exprs.length == 2) Seq(strLit(exprs, 1, "lm_score")) else Nil)
-  }
-
-  /** `nb_lang('docs')` — trained NB language classifier report. */
-  def nbLangTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "nb_lang takes (docs_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "nb_lang")), "nb_lang", Nil)
-  }
-
-  /** `tfidf_terms('docs'[, k])` — top-k TF-IDF terms per document
-    * ([[graft.pipeline.TextPipeline.tfidfTerms]]). */
-  def tfidfTermsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "tfidf_terms takes (docs_table[, k])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "tfidf_terms")),
-      "tfidf_terms",
-      if (exprs.length == 2) Seq(longLit(exprs, 1, "tfidf_terms")) else Nil)
-  }
-
-  /** `decon_bloom('docs')` — Bloom-prefiltered benchmark
-    * decontamination report
-    * ([[graft.pipeline.TextPipeline.decontaminateBloom]]; the filter
-    * is exact-verified, so the report equals `decontaminate`). */
-  def deconBloomTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "decon_bloom takes (docs_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "decon_bloom")),
-      "decon_bloom", Nil)
-  }
-
-  /** `dedup_audit('docs'[, n])` — deterministic near-dup audit sample
-    * with exact Jaccard ([[graft.pipeline.TextPipeline.dedupAudit]]). */
-  def dedupAuditTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "dedup_audit takes (docs_table[, n])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "dedup_audit")),
-      "dedup_audit",
-      if (exprs.length == 2) Seq(longLit(exprs, 1, "dedup_audit")) else Nil)
-  }
-
-  /** `pack_stats('docs'[, capacity[, n_shards]])` — per-shard packing
-    * report ([[graft.pipeline.TrainingData.packStats]]). */
-  def packStatsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "pack_stats takes (docs_table[, capacity[, n_shards]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "pack_stats")),
-      "pack_stats",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "pack_stats") })
-  }
-
-  /** `cms_heavy('docs'[, depth[, width[, topn]]])` — count-min-sketch
-    * heavy hitters graded against exact counts
-    * ([[graft.pipeline.TextPipeline.cmsHeavyHitters]]). */
-  def cmsHeavyTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 4,
-      "cms_heavy takes (docs_table[, depth[, width[, topn]]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "cms_heavy")), "cms_heavy",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "cms_heavy") })
-  }
-
-  /** `rproj('embeddings'[, k])` — JL signed-random-projection report
-    * ([[graft.pipeline.VectorOps.rprojReport]]). */
-  def rprojTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1 || exprs.length == 2,
-      "rproj takes (embeddings_table[, k])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "rproj")), "rproj",
-      if (exprs.length == 2) Seq(longLit(exprs, 1, "rproj")) else Nil)
-  }
-
-  /** `pmi_bigrams('docs'[, min_count[, topn]])` — top collocations by
-    * nano PMI ([[graft.pipeline.TextPipeline.pmiBigrams]]). */
-  def pmiBigramsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "pmi_bigrams takes (docs_table[, min_count[, topn]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "pmi_bigrams")),
-      "pmi_bigrams",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "pmi_bigrams") })
-  }
-
-  /** `dedup_recall('docs'[, sample_mod[, tau]])` — banded-candidate
-    * precision/recall vs exact-Jaccard truth
-    * ([[graft.pipeline.TextPipeline.dedupRecall]]). */
-  def dedupRecallTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "dedup_recall takes (docs_table[, sample_mod[, tau]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "dedup_recall")),
-      "dedup_recall",
-      if (exprs.length >= 2) Seq(longLit(exprs, 1, "dedup_recall")) else Nil,
-      Nil,
-      if (exprs.length == 3) Seq(dblLit(exprs, 2, "dedup_recall")) else Nil)
-  }
-
-  /** `funnel('events')` — ordered conversion funnel
-    * ([[graft.relational.CoreQueries.funnelOf]]). */
-  def funnelTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "funnel takes (events_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "funnel")), "funnel", Nil)
-  }
-
-  /** `retention('events')` — weekly cohort retention
-    * ([[graft.relational.CoreQueries.retentionOf]]). */
-  def retentionTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "retention takes (events_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "retention")), "retention", Nil)
-  }
-
-  /** `anomaly('events')` — integer 3σ outlier screen
-    * ([[graft.relational.CoreQueries.eventAnomaliesOf]]). */
-  def anomalyTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "anomaly takes (events_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "anomaly")), "anomaly", Nil)
-  }
-
-  /** `source_cap('docs'[, cap])` — per-source quality quota
-    * ([[graft.pipeline.TextPipeline.sourceCap]]). */
-  def sourceCapTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "source_cap takes (docs_table[, cap])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "source_cap")), "source_cap",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "source_cap")))
-  }
-
-  /** `epoch_plan('docs'[, budget_num[, budget_den[, max_epochs]]])` —
-    * data-constrained token-budget allocation across sources
-    * ([[graft.pipeline.TrainingData.epochPlan]]). */
-  def epochPlanTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 4,
-      "epoch_plan takes (docs_table[, budget_num[, budget_den[, max_epochs]]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "epoch_plan")),
-      "epoch_plan",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "epoch_plan") })
-  }
-
-  /** `pagerank('emb'[, k[, iters]])` — kNN-graph centrality
-    * ([[graft.pipeline.VectorOps.pageRank]]). */
-  def pageRankTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "pagerank takes (emb_table[, k[, iters]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "pagerank")), "pagerank",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "pagerank") })
-  }
-
-  /** `label_prop('emb'[, k[, iters[, seed_mod]]])` — kNN-graph label
-    * propagation ([[graft.pipeline.VectorOps.labelPropagate]]). */
-  def labelPropTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 4,
-      "label_prop takes (emb_table[, k[, iters[, seed_mod]]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "label_prop")), "label_prop",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "label_prop") })
-  }
-
-  /** `source_distinct('docs'[, k])` — per-source KMV distinct
-    * estimate ([[graft.pipeline.TextPipeline.sourceDistinctEstimate]]). */
-  def sourceDistinctTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "source_distinct takes (docs_table[, k])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "source_distinct")),
-      "source_distinct",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "source_distinct")))
-  }
-
-  /** `weighted_sample('docs'[, n[, salt]])` — systematic PPS sampling
-    * ([[graft.pipeline.TrainingData.weightedSample]]). */
-  def weightedSampleTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "weighted_sample takes (docs_table[, n[, salt]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "weighted_sample")),
-      "weighted_sample",
-      if (exprs.length >= 2) Seq(longLit(exprs, 1, "weighted_sample"))
-      else Nil,
-      if (exprs.length == 3) Seq(strLit(exprs, 2, "weighted_sample"))
-      else Nil)
-  }
-
-  /** `sessions('events')` — per-user gaps-and-islands session stats
-    * ([[graft.relational.CoreQueries.sessionizeOf]]). */
-  def sessionsTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "sessions takes (events_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "sessions")),
-      "sessions", Nil)
-  }
-
-  /** `gram('emb')` — exact integer Gram matrix
-    * ([[graft.pipeline.VectorOps.gramMatrix]]). */
-  def gramTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "gram takes (emb_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "gram")), "gram", Nil)
-  }
-
-  /** `pca('emb'[, iters])` — leading principal direction
-    * ([[graft.pipeline.VectorOps.pcaLeading]]). */
-  def pcaTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "pca takes (emb_table[, iters])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "pca")), "pca",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "pca")))
-  }
-
-  /** `pca2('emb'[, iters])` — second principal direction
-    * ([[graft.pipeline.VectorOps.pcaSecond]]). */
-  def pca2Tvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "pca2 takes (emb_table[, iters])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "pca2")), "pca2",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "pca2")))
-  }
-
-  /** `pca_project('emb'[, iters])` — per-vector spectral projection
-    * ([[graft.pipeline.VectorOps.pcaProject]]). */
-  def pcaProjectTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "pca_project takes (emb_table[, iters])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "pca_project")),
-      "pca_project",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "pca_project")))
-  }
-
-  /** `cluster_sample('emb'[, per_cell])` — top-cosine exemplars per
-    * k-means cell ([[graft.pipeline.VectorOps.clusterSample]]). */
-  def clusterSampleTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "cluster_sample takes (emb_table[, per_cell])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "cluster_sample")),
-      "cluster_sample",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "cluster_sample")))
-  }
-
-  /** `quantiles('docs')` — per-source length quantiles
-    * ([[graft.pipeline.TextPipeline.lengthQuantiles]]). */
-  def quantilesTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "quantiles takes (docs_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "quantiles")),
-      "quantiles", Nil)
-  }
-
-  /** `knn_graph('emb'[, k[, n_probe]])` — IVF-bounded kNN edges
-    * ([[graft.pipeline.VectorOps.knnGraph]]). */
-  def knnGraphTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "knn_graph takes (emb_table[, k[, n_probe]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "knn_graph")),
-      "knn_graph",
-      exprs.drop(1).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, i + 1, "knn_graph") })
-  }
-
-  /** `char_span_dedup('docs'[, l])` — duplicated ≥ l-char runs as
-    * merged char intervals
-    * ([[graft.pipeline.TextPipeline.charSpanDedup]]). */
-  def charSpanDedupTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "char_span_dedup takes (docs_table[, l])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "char_span_dedup")),
-      "char_span_dedup",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "char_span_dedup")))
-  }
-
-  /** `knn_clusters('emb'[, k])` — mutual-kNN connected components
-    * ([[graft.pipeline.VectorOps.knnClusters]]). */
-  def knnClustersTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "knn_clusters takes (emb_table[, k])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "knn_clusters")),
-      "knn_clusters",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "knn_clusters")))
-  }
-
-  /** `triangles('emb'[, k])` — mutual-kNN triangle counts and local
-    * clustering coefficients
-    * ([[graft.pipeline.VectorOps.triangleStats]]). */
-  def trianglesTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "triangles takes (emb_table[, k])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "triangles")),
-      "triangles",
-      exprs.drop(1).map(_ => longLit(exprs, 1, "triangles")))
-  }
-
-  /** `incr_ann('emb')` — incremental ANN-index maintenance view: the
-    * % 4 ≠ 0 split is the indexed base, % 4 = 0 the ingest batch
-    * assigned under the base-trained frozen centroids
-    * ([[graft.pipeline.VectorOps.incrAnnAssign]]). */
-  def incrAnnTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "incr_ann takes (emb_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "incr_ann")),
-      "incr_ann", Nil)
-  }
-
-  /** `hybrid('docs', 'emb'[, k[, n_probe]])` — reciprocal-rank-fused
-    * hybrid retrieval over the lexical (BM25) and semantic (kNN)
-    * lists ([[graft.pipeline.Search.hybridSearch]]); `n_probe`
-    * widens the semantic side's IVF probe (cell-boundary recall at
-    * ~n_probe× the kNN pair cost). */
-  def hybridTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 2 && exprs.length <= 4,
-      "hybrid takes (docs_table, emb_table[, k[, n_probe]])")
-    UnresolvedGraftCall2(rel(strLit(exprs, 0, "hybrid")),
-      rel(strLit(exprs, 1, "hybrid")), "hybrid",
-      exprs.drop(2).zipWithIndex.map { case (_, i) =>
-        longLit(exprs, 2 + i, "hybrid") })
-  }
-
-  /** `sem_decon('emb'[, benchMax[, tau]])` — semantic decontamination
-    * against the benchmark slice
-    * ([[graft.pipeline.VectorOps.semDecon]]). */
-  def semDeconTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "sem_decon takes (emb_table[, bench_max[, tau]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "sem_decon")),
-      "sem_decon",
-      if (exprs.length > 1) Seq(longLit(exprs, 1, "sem_decon")) else Nil,
-      Nil,
-      if (exprs.length > 2) Seq(dblLit(exprs, 2, "sem_decon")) else Nil)
-  }
-
-  /** `sem_decon_ivf('emb'[, benchMax[, tau]])` — the IVF route of
-    * semantic decontamination for a benchmark too large to broadcast
-    * ([[graft.pipeline.VectorOps.semDeconIvf]]). */
-  def semDeconIvfTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 3,
-      "sem_decon_ivf takes (emb_table[, bench_max[, tau]])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "sem_decon_ivf")),
-      "sem_decon_ivf",
-      if (exprs.length > 1) Seq(longLit(exprs, 1, "sem_decon_ivf"))
-      else Nil,
-      Nil,
-      if (exprs.length > 2) Seq(dblLit(exprs, 2, "sem_decon_ivf"))
-      else Nil)
-  }
-
-  /** `ann_drift('emb')` — the append-index retrain gauge over the
-    * same % 4 base/batch split
-    * ([[graft.pipeline.VectorOps.ivfCellDrift]]). */
-  def annDriftTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 1, "ann_drift takes (emb_table)")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "ann_drift")),
-      "ann_drift", Nil)
-  }
-
-  /** `semdedup('emb'[, tau])` — cluster-then-prune semantic dedup
-    * ([[graft.pipeline.VectorOps.semDedup]]). */
-  def semDedupTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length >= 1 && exprs.length <= 2,
-      "semdedup takes (emb_table[, tau])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "semdedup")), "semdedup",
-      Nil, Nil,
-      exprs.drop(1).map(_ => dblLit(exprs, 1, "semdedup")))
-  }
-
-  /** `depth_summary('l3', start_us, end_us, freq_us[, bps_step,
-    * max_bps])` — the reference `get.depth_summary` surface
-    * (`db/get_schema.sql:281-298`); expands to `GridOps.depthSummary`
-    * over the frequency grid. */
-  def depthSummaryTvf(exprs: Seq[Expression]): LogicalPlan = {
-    require(exprs.length == 4 || exprs.length == 6,
-      "depth_summary takes (level3_table, start_us, end_us, freq_us" +
-        "[, bps_step, max_bps])")
-    UnresolvedGraftCall(rel(strLit(exprs, 0, "depth_summary")),
-      "depth_summary",
-      Seq(longLit(exprs, 1, "depth_summary"),
-        longLit(exprs, 2, "depth_summary"),
-        longLit(exprs, 3, "depth_summary")) ++
-        (if (exprs.length == 6)
-          Seq(longLit(exprs, 4, "depth_summary"),
-            longLit(exprs, 5, "depth_summary"))
-        else Seq(25L, 500L)))
-  }
+  val all: Seq[TvfDef] = Seq(
+    // GraftApi.depth; the optional 4th argument is a precision tier
+    // ('r0'|'p0'..'p4', the reference's get.depth precision parameter)
+    tvf("depth", "(level3_table, start_us, end_us[, precision])",
+        Seq(3, 4), Rel, Integral, Integral, Str) { c =>
+      if (c.has(3)) c.api.depth(c.long(1), c.long(2), c.str(3))
+      else c.api.depth(c.long(1), c.long(2))
+    },
+    // GraftApi.spread, or spreadResampled when the optional grid
+    // frequency (the reference's p_frequency) is given
+    tvf("spread", "(level3_table[, freq_us])", 1 to 2, Rel, Integral) { c =>
+      if (c.has(1)) c.api.spreadResampled(c.long(1)) else c.api.spread()
+    },
+    // GraftApi.events; the optional 4th argument is the reference's
+    // p_frequency (db/get_schema.sql:307,339-341): the prevailing spread
+    // becomes the grid-resampled L1 stream
+    tvf("events", "(level3_table, start_us, end_us[, freq_us])",
+        Seq(3, 4), Rel, Integral, Integral, Integral) { c =>
+      if (c.has(3)) c.api.events(c.long(1), c.long(2),
+        frequencyMicros = Some(c.long(3)))
+      else c.api.events(c.long(1), c.long(2))
+    },
+    // the inferred/matched trades
+    tvf("trades", "(level3_table)", Seq(1), Rel)(_.api.trades()),
+    // liquidity, bps, levels
+    tvf("order_book", "(level3_table, at_us)", Seq(2), Rel, Integral) { c =>
+      c.api.orderBook(c.long(1))
+    },
+    // the reference get.queues surface (db/get_schema.sql:623-630: same
+    // parameter list, minus pair/exchange which our level3 frame carries
+    // as columns); tick_type is 'ABSOLUTE' (default) or 'LOGRELATIVE'
+    tvf("queues", "(level3_table, start_us, end_us, freq_us, " +
+        "tick_size, first_tick, last_tick[, tick_type])", Seq(7, 8),
+        Rel, Integral, Integral, Integral, Numeric, Integral, Integral,
+        Str) { c =>
+      val firstTick = c.int(5)
+      val nTicks = c.int(6) - firstTick + 1
+      c.str(7, "ABSOLUTE").toUpperCase match {
+        case "ABSOLUTE" =>
+          GridOps.queues(c.rel, grid(c), c.dbl(4), firstTick, nTicks)
+        case "LOGRELATIVE" =>
+          GridOps.queuesLogRelative(c.rel, grid(c), c.dbl(4), firstTick, nTicks)
+        case other => throw new IllegalArgumentException(
+          s"queues tick_type must be ABSOLUTE or LOGRELATIVE, got $other")
+      }
+    },
+    // the reference get.depth_summary surface (db/get_schema.sql:281-298)
+    tvf("depth_summary", "(level3_table, start_us, end_us, freq_us" +
+        "[, bps_step, max_bps])", Seq(4, 6),
+        Rel, Integral, Integral, Integral, Integral, Integral) { c =>
+      GridOps.depthSummary(c.rel, grid(c), c.int(4, 25), c.int(5, 500))
+    },
+    // the SRF's own result shape (ts, bid.price, ask.price, b[], a[]):
+    // one row per (pair, instant), dense per-bucket volume arrays
+    tvf("queues_wide", "(level3_table, start_us, end_us, freq_us, " +
+        "tick_size, n_ticks)", Seq(6),
+        Rel, Integral, Integral, Integral, Numeric, Integral) { c =>
+      c.api.queuesWide(grid(c), c.dbl(4), c.int(5))
+    },
+    // the client's depth.resample regridding over the frequency grid
+    tvf("depth_resample", "(level3_table, start_us, end_us, freq_us, " +
+        "tick_size)", Seq(5), Rel, Integral, Integral, Integral,
+        Numeric) { c =>
+      GridOps.depthResample(c.rel, grid(c), c.dbl(4))
+    },
+    // 0 = best quotes, the whole-book sentinel = full-book VWAP
+    tvf("trading_period", "(level3_table, volume_units)", Seq(2),
+        Rel, Integral) { c =>
+      c.api.tradingPeriod(c.long(1))
+    },
+    // commission and per-second interest as numeric literals
+    tvf("trading_strategy", "(level3_table, phi, rho)", Seq(3),
+        Rel, Numeric, Numeric) { c =>
+      c.api.tradingStrategy(c.dbl(1), c.dbl(2))
+    },
+    tvf("draws", "(level3_table, epsilon)", Seq(2), Rel, Numeric) { c =>
+      c.api.epsilonDrawUpDowns(c.dbl(1))
+    },
+    // GraftApi.intervals (the reference p_min_duration)
+    tvf("events_intervals", "(level3_table[, min_duration_us])", 1 to 2,
+        Rel, Integral) { c =>
+      c.api.intervals(c.long(1, 0L))
+    },
+    // per-era feed statistics
+    tvf("summary", "(level3_table)", Seq(1), Rel)(_.api.summary()),
+    // flat event projection
+    tvf("export", "(level3_table)", Seq(1), Rel)(_.api.export()),
+    // the plotDataAvailability data frame
+    tvf("plot_avail", "(level3_table[, min_duration_us])", 1 to 2,
+        Rel, Integral) { c =>
+      c.api.dataAvailabilityGrid(c.long(1, 0L))
+    },
+    // the plotPositionTrellis data frame, log-relative
+    tvf("plot_trellis", "(level3_table[, phi, rho[, volume_units]])",
+        Seq(1, 3, 4), Rel, Numeric, Numeric, Integral) { c =>
+      c.api.positionTrellis(phi = c.dbl(1, 0.5), rho = c.dbl(2, 1e-6),
+        volumeUnits = c.long(3, 50L))
+    },
+    // pipeline surface: the relation is a DOCUMENTS / embeddings /
+    // events table here, not level3 — the marker is source-agnostic.
+    // Keyword retrieval; with no query string the default probe set runs.
+    tvf("bm25", "(docs_table[, k[, query_text]])", 1 to 3,
+        Rel, Integral, Str) { c =>
+      Search.bm25TopK(c.rel,
+        if (c.has(2)) Seq(1L -> c.str(2)) else Search.Bm25Queries,
+        c.int(1, 5))
+    },
+    // content-hash exact dedup report
+    tvf("dedup_exact", "(docs_table)", Seq(1), Rel) { c =>
+      TextPipeline.exactDedup(c.rel)
+    },
+    // inter-document duplicate n-gram coverage
+    tvf("dup_ngrams", "(docs_table[, n])", 1 to 2, Rel, Integral) { c =>
+      TextPipeline.interDocDupNgrams(c.rel, c.int(1, 5))
+    },
+    // per-document quality signals
+    tvf("quality", "(docs_table)", Seq(1), Rel) { c =>
+      TextPipeline.qualityScore(c.rel)
+    },
+    // per-source KL(source ‖ corpus) in nano units
+    tvf("source_drift", "(docs_table)", Seq(1), Rel) { c =>
+      TextPipeline.sourceDrift(c.rel)
+    },
+    // corpus-hot-chunk removal
+    tvf("boilerplate", "(docs_table[, chunk_words[, max_df]])", 1 to 3,
+        Rel, Integral, Integral) { c =>
+      TextPipeline.boilerplateRemove(c.rel, c.int(1, 10), c.long(2, 1L))
+    },
+    // exact substring dedup report
+    tvf("substring_dedup", "(docs_table[, min_words])", 1 to 2,
+        Rel, Integral) { c =>
+      TextPipeline.substringDedup(c.rel, c.int(1, 8))
+    },
+    // DSIR importance weights toward the target-language slice
+    tvf("dsir", "(docs_table[, target_lang])", 1 to 2, Rel, Str) { c =>
+      TextPipeline.dsirWeights(c.rel, targetLang = c.str(1, "en"))
+    },
+    // bigram-LM quality score
+    tvf("lm_score", "(docs_table[, train_lang])", 1 to 2, Rel, Str) { c =>
+      TextPipeline.lmScore(c.rel, trainLang = c.str(1, "en"))
+    },
+    // trained NB language classifier report
+    tvf("nb_lang", "(docs_table)", Seq(1), Rel) { c =>
+      TextPipeline.nbLangClassify(c.rel)
+    },
+    // top-k TF-IDF terms per document
+    tvf("tfidf_terms", "(docs_table[, k])", 1 to 2, Rel, Integral) { c =>
+      TextPipeline.tfidfTerms(c.rel, c.int(1, 3))
+    },
+    // Bloom-prefiltered benchmark decontamination report (the filter is
+    // exact-verified, so the report equals `decontaminate`)
+    tvf("decon_bloom", "(docs_table)", Seq(1), Rel) { c =>
+      TextPipeline.decontaminateBloom(c.rel)
+    },
+    // deterministic near-dup audit sample with exact Jaccard
+    tvf("dedup_audit", "(docs_table[, n])", 1 to 2, Rel, Integral) { c =>
+      TextPipeline.dedupAudit(c.rel, c.int(1, 20))
+    },
+    // per-shard packing report
+    tvf("pack_stats", "(docs_table[, capacity[, n_shards]])", 1 to 3,
+        Rel, Integral, Integral) { c =>
+      TrainingData.packStats(c.rel, c.spark, c.long(1, 256L), c.int(2, 16))
+    },
+    // count-min-sketch heavy hitters graded against exact counts
+    tvf("cms_heavy", "(docs_table[, depth[, width[, topn]]])", 1 to 4,
+        Rel, Integral, Integral, Integral) { c =>
+      TextPipeline.cmsHeavyHitters(c.rel, c.int(1, 3), c.int(2, 512),
+        c.int(3, 20))
+    },
+    // JL signed-random-projection report
+    tvf("rproj", "(embeddings_table[, k])", 1 to 2, Rel, Integral) { c =>
+      VectorOps.rprojReport(c.rel, c.int(1, 16))
+    },
+    // top collocations by nano PMI
+    tvf("pmi_bigrams", "(docs_table[, min_count[, topn]])", 1 to 3,
+        Rel, Integral, Integral) { c =>
+      TextPipeline.pmiBigrams(c.rel, c.long(1, 5L), c.int(2, 20))
+    },
+    // banded-candidate precision/recall vs exact-Jaccard truth
+    tvf("dedup_recall", "(docs_table[, sample_mod[, tau]])", 1 to 3,
+        Rel, Integral, Numeric) { c =>
+      TextPipeline.dedupRecall(c.rel, c.int(1, 2), c.dbl(2, 0.5))
+    },
+    // ordered conversion funnel
+    tvf("funnel", "(events_table)", Seq(1), Rel) { c =>
+      CoreQueries.funnelOf(c.rel.select(col("user_id"), col("event_type"),
+        graft.Tables.tsMicros(col("ts")).as("t")))
+    },
+    // per-user gaps-and-islands session stats
+    tvf("sessions", "(events_table)", Seq(1), Rel) { c =>
+      CoreQueries.sessionizeOf(c.rel.select(col("user_id"), col("event_id"),
+        graft.Tables.tsMicros(col("ts")).as("t")))
+    },
+    // weekly cohort retention
+    tvf("retention", "(events_table)", Seq(1), Rel) { c =>
+      CoreQueries.retentionOf(c.rel.select(col("user_id"),
+        graft.Tables.tsMicros(col("ts")).as("t")))
+    },
+    // integer 3σ outlier screen
+    tvf("anomaly", "(events_table)", Seq(1), Rel) { c =>
+      CoreQueries.eventAnomaliesOf(c.rel)
+    },
+    // per-source quality quota
+    tvf("source_cap", "(docs_table[, cap])", 1 to 2, Rel, Integral) { c =>
+      TextPipeline.sourceCap(c.rel, c.int(1, 10))
+    },
+    // data-constrained token-budget allocation across sources
+    tvf("epoch_plan",
+        "(docs_table[, budget_num[, budget_den[, max_epochs]]])", 1 to 4,
+        Rel, Integral, Integral, Integral) { c =>
+      TrainingData.epochPlan(c.rel, c.int(1, 7), c.int(2, 4), c.int(3, 2))
+    },
+    // kNN-graph centrality
+    tvf("pagerank", "(emb_table[, k[, iters]])", 1 to 3,
+        Rel, Integral, Integral) { c =>
+      VectorOps.pageRank(c.rel, c.int(1, 5), iters = c.int(2, 8),
+        trainedCents = cents(c.rel))
+    },
+    // kNN-graph label propagation
+    tvf("label_prop", "(emb_table[, k[, iters[, seed_mod]]])", 1 to 4,
+        Rel, Integral, Integral, Integral) { c =>
+      VectorOps.labelPropagate(c.rel, c.int(1, 5), iters = c.int(2, 3),
+        seedMod = c.int(3, 10), trainedCents = cents(c.rel))
+    },
+    // exact integer Gram matrix
+    tvf("gram", "(emb_table)", Seq(1), Rel) { c =>
+      VectorOps.gramMatrix(c.rel)
+    },
+    // leading principal direction
+    tvf("pca", "(emb_table[, iters])", 1 to 2, Rel, Integral) { c =>
+      VectorOps.pcaLeading(c.rel, c.int(1, 12))
+    },
+    // second principal direction
+    tvf("pca2", "(emb_table[, iters])", 1 to 2, Rel, Integral) { c =>
+      VectorOps.pcaSecond(c.rel, c.int(1, 12))
+    },
+    // per-vector spectral projection
+    tvf("pca_project", "(emb_table[, iters])", 1 to 2, Rel, Integral) { c =>
+      VectorOps.pcaProject(c.rel, c.int(1, 12))
+    },
+    // top-cosine exemplars per k-means cell
+    tvf("cluster_sample", "(emb_table[, per_cell])", 1 to 2,
+        Rel, Integral) { c =>
+      VectorOps.clusterSample(c.rel, perCell = c.int(1, 8),
+        trainedCents = cents(c.rel))
+    },
+    // per-source length quantiles
+    tvf("quantiles", "(docs_table)", Seq(1), Rel) { c =>
+      TextPipeline.lengthQuantiles(c.rel)
+    },
+    // IVF-bounded kNN edges
+    tvf("knn_graph", "(emb_table[, k[, n_probe]])", 1 to 3,
+        Rel, Integral, Integral) { c =>
+      VectorOps.knnGraph(c.rel, c.int(1, 5), trainedCents = cents(c.rel),
+        nProbe = c.int(2, 1))
+    },
+    // duplicated ≥ l-char runs as merged char intervals
+    tvf("char_span_dedup", "(docs_table[, l])", 1 to 2, Rel, Integral) { c =>
+      TextPipeline.charSpanDedup(c.rel, c.int(1, 24))
+    },
+    // mutual-kNN connected components
+    tvf("knn_clusters", "(emb_table[, k])", 1 to 2, Rel, Integral) { c =>
+      VectorOps.knnClusters(c.rel, c.int(1, 5), trainedCents = cents(c.rel))
+    },
+    // cluster-then-prune semantic dedup
+    tvf("semdedup", "(emb_table[, tau])", 1 to 2, Rel, Numeric) { c =>
+      VectorOps.semDedup(c.rel, c.dbl(1, 0.45), trainedCents = cents(c.rel))
+    },
+    // mutual-kNN triangle counts and local clustering coefficients
+    tvf("triangles", "(emb_table[, k])", 1 to 2, Rel, Integral) { c =>
+      VectorOps.triangleStats(c.rel, c.int(1, 5), trainedCents = cents(c.rel))
+    },
+    // incremental ANN-index maintenance view: base (% 4 ≠ 0) = the
+    // already-indexed corpus, batch (% 4 = 0) = the ingest, assigned
+    // under the base-trained frozen centroids. The base assignment is
+    // recomputed in-query here — the API row (`pipe_incr_ann`) is the
+    // lake-serving shape that reads the stored postings
+    tvf("incr_ann", "(emb_table)", Seq(1), Rel) { c =>
+      val base = c.rel.filter(col("vec_id") % 4 =!= 0)
+      val cs = VectorOps.ivfTrainCached(base)
+      VectorOps.incrAnnAssign(c.rel.filter(col("vec_id") % 4 === 0), cs,
+        VectorOps.ivfAssignments(base, cs))
+    },
+    // the append-index retrain gauge over the same % 4 base/batch split:
+    // the batch's cell histogram against the base index's
+    tvf("ann_drift", "(emb_table)", Seq(1), Rel) { c =>
+      val base = c.rel.filter(col("vec_id") % 4 =!= 0)
+      val cs = VectorOps.ivfTrainCached(base)
+      VectorOps.ivfCellDrift(VectorOps.ivfAssignments(base, cs),
+        VectorOps.ivfAssignments(c.rel.filter(col("vec_id") % 4 === 0), cs))
+    },
+    // semantic decontamination against the benchmark slice
+    tvf("sem_decon", "(emb_table[, bench_max[, tau]])", 1 to 3,
+        Rel, Integral, Numeric) { c =>
+      VectorOps.semDecon(c.rel, c.long(1, 10L), c.dbl(2, 0.4))
+    },
+    // the IVF route of semantic decontamination, for a benchmark too
+    // large to broadcast
+    tvf("sem_decon_ivf", "(emb_table[, bench_max[, tau]])", 1 to 3,
+        Rel, Integral, Numeric) { c =>
+      VectorOps.semDeconIvf(c.rel, c.long(1, 10L), c.dbl(2, 0.4),
+        trainedCents = cents(c.rel))
+    },
+    // reciprocal-rank-fused hybrid retrieval over the lexical (BM25) and
+    // semantic (kNN) lists of two DISTINCT tables; n_probe widens the
+    // semantic side's IVF probe (cell-boundary recall at ~n_probe× the
+    // kNN pair cost). The API row (`pipe_hybrid_search`) is the
+    // stored-index serving shape
+    tvf("hybrid", "(docs_table, emb_table[, k[, n_probe]])", 2 to 4,
+        Rel, Rel, Integral, Integral) { c =>
+      Search.hybridSearch(c.rels(0), c.rels(1), k = c.int(2, 5),
+        trainedCents = cents(c.rels(1)), nProbe = c.int(3, 1))
+    },
+    // per-source KMV distinct estimate
+    tvf("source_distinct", "(docs_table[, k])", 1 to 2, Rel, Integral) { c =>
+      TextPipeline.sourceDistinctEstimate(c.rel, c.int(1, 64))
+    },
+    // systematic PPS sampling
+    tvf("weighted_sample", "(docs_table[, n[, salt]])", 1 to 3,
+        Rel, Integral, Str) { c =>
+      TrainingData.weightedSample(c.rel, c.int(1, 50), c.str(2, "sample0"))
+    })
 }

@@ -530,6 +530,46 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("every graft table function rejects misuse at analysis with its usage and argument position") {
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    val group = "graft-tvf-misuse"
+    s2.sparkContext.setJobGroup(group, group)
+    try {
+      def failure(q: String): String = intercept[Exception](s2.sql(q)).getMessage
+      val fns = graft.plans.GraftTableFunctions.all
+      assert(fns.map(_.name).distinct.size == fns.size)
+      fns.foreach { f =>
+        assert(s2.sessionState.tableFunctionRegistry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(f.name)), f.name)
+        val noArgs = failure(s"SELECT * FROM ${f.name}()")
+        assert(noArgs.stripPrefix("requirement failed: ").startsWith(f.usage),
+          s"${f.name}: $noArgs")
+        // arguments are checked in call order, so an integer in every
+        // position fails on the first (the table name)
+        val ints = Seq.fill(f.arities.min)("1").mkString(", ")
+        val intTable = failure(s"SELECT * FROM ${f.name}($ints)")
+        assert(intTable.stripPrefix("requirement failed: ")
+          .startsWith(s"${f.name} argument 1 must be a string literal"),
+          s"${f.name}: $intTable")
+      }
+      assert(s2.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty)
+    } finally {
+      s2.sparkContext.clearJobGroup()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+  }
+
   test("asof_join is drivable from SQL text through GraftExtensions") {
     // a fresh session on the shared context, built WITH the extensions
     // (the suite-shared session predates them); restored in finally so
