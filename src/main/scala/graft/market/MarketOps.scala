@@ -1,8 +1,12 @@
 package graft.market
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Spark-facing market-data operators over a level3 DataFrame (as
   * produced by [[Level3Source.level3]]).
@@ -14,6 +18,11 @@ import org.apache.spark.sql.functions._
   *     sequential pass per pair per executor core, state O(book);
   *   - *expression* ops: pure Catalyst (windows/joins) where the
   *     validity-interval encoding makes the answer declarative.
+  *
+  * Point requests (`orderBookQuery`, `orderBookAt`, `startingDepth`,
+  * `spreadAt`) take their instant through [[instant]], so the code
+  * Spark generates for them does not change from one instant to the
+  * next.
   */
 object MarketOps {
 
@@ -23,6 +32,16 @@ object MarketOps {
     * is the knob trading seed-row overhead (O(live orders) rows per
     * boundary) against group count. */
   val DefaultSliceMicros: Long = 86400L * 1000000
+
+  /** The instant `micros` as a column whose generated code reads the
+    * value from the stage's reference array instead of inlining it. A
+    * new instant then reuses the compiled classes of the last one
+    * instead of compiling each stage again, on the driver and on the
+    * executor. It is still a `Literal`, so Spark pushes
+    * `microtimestamp <= t` and `next_microtimestamp > t` into the
+    * parquet scan as before. */
+  private def instant(micros: Long): Column =
+    ColumnBridge.column(new InstantLiteral(micros, LongType))
 
   private def bookEvents(level3: DataFrame, spark: SparkSession)
       : Dataset[BookEvent] = {
@@ -270,15 +289,17 @@ object MarketOps {
     * declarative validity-interval snapshot (filter + groupBy — fully
     * parallel, amounts are integral so summation order is
     * immaterial). */
-  def startingDepth(level3: DataFrame, t0: Long): DataFrame =
+  def startingDepth(level3: DataFrame, t0: Long): DataFrame = {
+    val t = instant(t0)
     level3
-      .filter(col("microtimestamp") <= t0 && col("next_microtimestamp") > t0)
+      .filter(col("microtimestamp") <= t && col("next_microtimestamp") > t)
       .groupBy("pair_id", "side", "price")
       .agg(sum("amount").as("volume"))
       .select(col("pair_id").cast("long").as("pair_id"),
-        lit(t0).as("ts"),
+        t.as("ts"),
         when(col("side") === "b", "bid").otherwise("ask").as("side"),
         col("price"), col("volume"))
+  }
 
   /** The change stream alone, in (t0, t1] — the cacheable part of
     * `get.depth` (the reference's client caches exactly this split so
@@ -398,9 +419,9 @@ object MarketOps {
     * second overload over `_starting_depth`, `db/get_schema.sql:645-682`):
     * best bid/ask price and the total quantity resting at each. */
   def spreadAt(level3: DataFrame, tsMicros: Long): DataFrame = {
+    val t = instant(tsMicros)
     val snap = level3
-      .filter(col("microtimestamp") <= tsMicros &&
-        col("next_microtimestamp") > tsMicros)
+      .filter(col("microtimestamp") <= t && col("next_microtimestamp") > t)
       .groupBy("pair_id", "side", "price")
       .agg(sum("amount").as("qty"))
     val w = Window.partitionBy("pair_id", "side")
@@ -414,7 +435,7 @@ object MarketOps {
         max(when(col("side") === "b", col("qty"))).as("bid_qty"),
         max(when(col("side") === "s", col("price"))).as("ask_price"),
         max(when(col("side") === "s", col("qty"))).as("ask_qty"))
-      .withColumn("ts", lit(tsMicros))
+      .withColumn("ts", t)
   }
 
   /** Diff of the books standing at two instants: synthetic
@@ -473,13 +494,12 @@ object MarketOps {
   def orderBookAt(level3: DataFrame, tsMicros: Long,
       onlyMakers: Boolean = false, before: Boolean = false,
       checkTakers: Boolean = false, side: Option[String] = None): DataFrame = {
+    val t = instant(tsMicros)
     val validity =
       if (before)
-        col("microtimestamp") < tsMicros &&
-          col("next_microtimestamp") >= tsMicros
+        col("microtimestamp") < t && col("next_microtimestamp") >= t
       else
-        col("microtimestamp") <= tsMicros &&
-          col("next_microtimestamp") > tsMicros
+        col("microtimestamp") <= t && col("next_microtimestamp") > t
     val snap = side.fold(level3.filter(validity))(s =>
       level3.filter(validity && col("side") === s))
     val flagged = snap
@@ -519,32 +539,30 @@ object MarketOps {
   }
 
   /** API-level snapshot (reference `get.order_book`,
-    * `db/get_schema.sql:561-603`): per-side cumulative liquidity, bps
-    * distance from best, dense-ranked price levels, and the reference's
-    * three result filters — `p_bps_range` (≤ bps from best), `p_min_bid`
-    * (bids at or above) and `p_max_ask` (asks at or below),
-    * `db/get_schema.sql:596-599`. */
+    * `db/get_schema.sql:561-603`): the live orders at `tsMicros` with
+    * per-side cumulative liquidity, bps distance from the best price,
+    * dense-ranked price levels, and the reference's result filters —
+    * `maxLevels`, `p_bps_range` (≤ bps from best), `p_min_bid` (bids at
+    * or above) and `p_max_ask` (asks at or below),
+    * `db/get_schema.sql:596-599`.
+    *
+    * Plan: the validity filter (pushed into the parquet scan), one
+    * exchange on (pair_id, side), then [[BookLevels]] over each
+    * partition, then the filters. The filters come after the kernel
+    * because `lvl` and `bps` are taken over the whole side. The
+    * columns are the input's plus `liquidity` (double), `lvl` (int)
+    * and `bps` (double). */
   def orderBookQuery(level3: DataFrame, tsMicros: Long,
       maxLevels: Option[Int] = None,
       bpsRange: Option[Double] = None,
       minBid: Option[Double] = None,
       maxAsk: Option[Double] = None): DataFrame = {
+    val t = instant(tsMicros)
     val snap = level3
-      .filter(col("microtimestamp") <= tsMicros &&
-        col("next_microtimestamp") > tsMicros)
-    val sideOrd = when(col("side") === "b", -col("price")).otherwise(col("price"))
-    val wCum = Window.partitionBy("pair_id", "side")
-      .orderBy(sideOrd, col("microtimestamp"), col("order_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wLvl = Window.partitionBy("pair_id", "side").orderBy(sideOrd)
-    val wBest = Window.partitionBy("pair_id", "side")
-    val best = when(col("side") === "b", max(col("price")).over(wBest))
-      .otherwise(min(col("price")).over(wBest))
-    val out = snap
-      .withColumn("liquidity", sum("amount").over(wCum))
-      .withColumn("lvl", dense_rank().over(wLvl))
-      .withColumn("bps",
-        abs(col("price") - best) / best * 10000.0)
+      .filter(col("microtimestamp") <= t && col("next_microtimestamp") > t)
+    val out = snap.repartition(col("pair_id"), col("side"))
+      .mapPartitions(new BookLevels(snap.schema))(
+        Encoders.row(BookLevels.outSchema(snap.schema)))
     val f1 = maxLevels.fold(out)(n => out.filter(col("lvl") <= n))
     val f2 = bpsRange.fold(f1)(r => f1.filter(col("bps") <= r))
     val f3 = minBid.fold(f2)(p => f2.filter(col("side") =!= "b" ||
@@ -552,4 +570,113 @@ object MarketOps {
     maxAsk.fold(f3)(p => f3.filter(col("side") =!= "s" ||
       col("price") <= p))
   }
+}
+
+/** A long literal whose generated code reads its value by reference
+  * (see `MarketOps.instant`). The constructor takes `Literal`'s two
+  * fields, so Catalyst can still copy the node by reflection. */
+private final class InstantLiteral(v: Any, t: DataType) extends Literal(v, t) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("instant", value, "java.lang.Long")
+    ExprCode.forNonNullValue(JavaCode.expression(s"$ref.longValue()", LongType))
+  }
+}
+
+/** `get.order_book`'s per-side columns over one shuffle partition of
+  * live orders; every (pair_id, side) lies in one partition. The
+  * kernel sorts the partition's rows by (pair_id, side, best-first
+  * price, microtimestamp, order_id), best-first being descending for
+  * bids (`side = 'b'`) and ascending otherwise, then walks each
+  * (pair_id, side) run once:
+  *   - `liquidity` — running sum of `amount` in that order, added left
+  *     to right from 0.0 as Spark's running window sum does, so the
+  *     doubles are bit-identical; null amounts are skipped;
+  *   - `lvl` — dense rank of the price (1 = best);
+  *   - `bps` — `|price − best| / best × 10000`, best being the side's
+  *     max (bids) or min (asks) price; null when best is 0.
+  * Prices compare as Spark compares doubles: nulls first, NaN above
+  * every number. `pair_id` (int), `side`, `microtimestamp` and
+  * `order_id` (long) are non-null in a level3 log. */
+private final class BookLevels(in: StructType)
+    extends (Iterator[Row] => Iterator[Row]) with Serializable {
+  private val Array(pairI, sideI, priceI, amountI, tsI, oidI) =
+    Array("pair_id", "side", "price", "amount", "microtimestamp", "order_id")
+      .map(in.fieldIndex)
+
+  // Spark's double order: -0.0 = 0.0, NaN greatest
+  private def cmpDouble(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  private def cmpPrice(a: Row, b: Row, bid: Boolean): Int =
+    (a.isNullAt(priceI), b.isNullAt(priceI)) match {
+      case (true, true) => 0
+      case (true, false) => -1
+      case (false, true) => 1
+      case _ =>
+        val c = cmpDouble(a.getDouble(priceI), b.getDouble(priceI))
+        if (bid) -c else c
+    }
+
+  private def sameSide(a: Row, b: Row): Boolean =
+    a.getInt(pairI) == b.getInt(pairI) && a.getString(sideI) == b.getString(sideI)
+
+  private def compare(a: Row, b: Row): Int = {
+    var c = Integer.compare(a.getInt(pairI), b.getInt(pairI))
+    if (c == 0) c = a.getString(sideI).compareTo(b.getString(sideI))
+    if (c == 0) c = cmpPrice(a, b, a.getString(sideI) == "b")
+    if (c == 0) c = java.lang.Long.compare(a.getLong(tsI), b.getLong(tsI))
+    if (c == 0) c = java.lang.Long.compare(a.getLong(oidI), b.getLong(oidI))
+    c
+  }
+
+  def apply(rows: Iterator[Row]): Iterator[Row] = {
+    val live = rows.toArray
+    java.util.Arrays.sort(live, (a: Row, b: Row) => compare(a, b))
+    val out = new Array[Row](live.length)
+    var i = 0
+    while (i < live.length) {
+      var j = i + 1
+      while (j < live.length && sameSide(live(i), live(j))) j += 1
+      val bid = live(i).getString(sideI) == "b"
+      var best = 0.0
+      var hasBest = false
+      var k = i
+      while (k < j) {
+        if (!live(k).isNullAt(priceI)) {
+          val p = live(k).getDouble(priceI)
+          if (!hasBest || (if (bid) cmpDouble(p, best) > 0 else cmpDouble(p, best) < 0))
+            best = p
+          hasBest = true
+        }
+        k += 1
+      }
+      var liquidity = 0.0
+      var hasLiquidity = false
+      var lvl = 0
+      k = i
+      while (k < j) {
+        val r = live(k)
+        if (k == i || cmpPrice(live(k - 1), r, bid) != 0) lvl += 1
+        if (!r.isNullAt(amountI)) {
+          liquidity += r.getDouble(amountI)
+          hasLiquidity = true
+        }
+        val bps =
+          if (r.isNullAt(priceI) || !hasBest || best == 0.0) null
+          else math.abs(r.getDouble(priceI) - best) / best * 10000.0
+        out(k) = Row.fromSeq(r.toSeq ++
+          Seq(if (hasLiquidity) liquidity else null, lvl, bps))
+        k += 1
+      }
+      i = j
+    }
+    out.iterator
+  }
+}
+
+private object BookLevels {
+  def outSchema(in: StructType): StructType = StructType(in.fields ++ Seq(
+    StructField("liquidity", DoubleType),
+    StructField("lvl", IntegerType, nullable = false),
+    StructField("bps", DoubleType)))
 }

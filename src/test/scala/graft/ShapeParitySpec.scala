@@ -365,4 +365,62 @@ class ShapeParitySpec extends AnyFunSuite {
         col("chars_exact"), col("chars_scoped"))
     assertSameRows(reference, TextPipeline.charScopedParity(docs, L, w))
   }
+
+  test("order-book kernel equals the three-window shape at seeded instants") {
+    val l3 = OrderBookFixture.level3(spark)
+    // the window shape the kernel replaced, inlined verbatim
+    def reference(tsMicros: Long, maxLevels: Option[Int],
+        bpsRange: Option[Double], minBid: Option[Double],
+        maxAsk: Option[Double]): DataFrame = {
+      val snap = l3
+        .filter(col("microtimestamp") <= tsMicros &&
+          col("next_microtimestamp") > tsMicros)
+      val sideOrd = when(col("side") === "b", -col("price")).otherwise(col("price"))
+      val wCum = Window.partitionBy("pair_id", "side")
+        .orderBy(sideOrd, col("microtimestamp"), col("order_id"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val wLvl = Window.partitionBy("pair_id", "side").orderBy(sideOrd)
+      val wBest = Window.partitionBy("pair_id", "side")
+      val best = when(col("side") === "b", max(col("price")).over(wBest))
+        .otherwise(min(col("price")).over(wBest))
+      val out = snap
+        .withColumn("liquidity", sum("amount").over(wCum))
+        .withColumn("lvl", dense_rank().over(wLvl))
+        .withColumn("bps",
+          abs(col("price") - best) / best * 10000.0)
+      val f1 = maxLevels.fold(out)(n => out.filter(col("lvl") <= n))
+      val f2 = bpsRange.fold(f1)(r => f1.filter(col("bps") <= r))
+      val f3 = minBid.fold(f2)(p => f2.filter(col("side") =!= "b" ||
+        col("price") >= p))
+      maxAsk.fold(f3)(p => f3.filter(col("side") =!= "s" ||
+        col("price") <= p))
+    }
+    // (maxLevels, bpsRange, minBid, maxAsk), one filtered case per instant
+    val filters = Seq(
+      (Some(3), None, None, None), (None, Some(30.0), None, None),
+      (None, None, Some(98.5), None), (None, None, None, Some(102.5)),
+      (Some(4), Some(60.0), Some(98.0), Some(103.0)))
+    val instants = OrderBookFixture.instants(9)
+    var oneSided = 0
+    var ties = 0
+    instants.zipWithIndex.foreach { case (t, k) =>
+      val got = graft.market.MarketOps.orderBookQuery(l3, t)
+      if (k == 0) assert(got.count() == 0, "no order is live before the log")
+      val sides = got.select("pair_id", "side").distinct().collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSet
+      if (sides.exists(_._1 == 3)) {
+        assert(!sides.contains((3, "s")))
+        oneSided += 1
+      }
+      // orders sharing a price and a microtimestamp: order_id decides
+      if (got.groupBy("pair_id", "side", "price", "microtimestamp").count()
+          .filter(col("count") > 1).count() > 0) ties += 1
+      assertSameRows(reference(t, None, None, None, None), got)
+      val (n, r, b, a) = filters(k % filters.size)
+      assertSameRows(reference(t, n, r, b, a),
+        graft.market.MarketOps.orderBookQuery(l3, t, n, r, b, a))
+    }
+    assert(oneSided > 0, "no instant with pair 3's one-sided book")
+    assert(ties > 0, "no instant with equal price and microtimestamp")
+  }
 }
