@@ -560,9 +560,9 @@ object MarketOps {
     val t = instant(tsMicros)
     val snap = level3
       .filter(col("microtimestamp") <= t && col("next_microtimestamp") > t)
+    val levels = new BookLevels(snap.schema)
     val out = snap.repartition(col("pair_id"), col("side"))
-      .mapPartitions(new BookLevels(snap.schema))(
-        Encoders.row(BookLevels.outSchema(snap.schema)))
+      .mapPartitions(levels)(Encoders.row(levels.outSchema))
     val f1 = maxLevels.fold(out)(n => out.filter(col("lvl") <= n))
     val f2 = bpsRange.fold(f1)(r => f1.filter(col("bps") <= r))
     val f3 = minBid.fold(f2)(p => f2.filter(col("side") =!= "b" ||
@@ -603,18 +603,24 @@ private final class BookLevels(in: StructType)
     Array("pair_id", "side", "price", "amount", "microtimestamp", "order_id")
       .map(in.fieldIndex)
 
+  def outSchema: StructType = StructType(in.fields ++ Seq(
+    StructField("liquidity", DoubleType),
+    StructField("lvl", IntegerType, nullable = false),
+    StructField("bps", DoubleType)))
+
   // Spark's double order: -0.0 = 0.0, NaN greatest
   private def cmpDouble(x: Double, y: Double): Int =
     if (x == y) 0 else java.lang.Double.compare(x, y)
 
+  // the window form's sort key: -price for bids, price otherwise
   private def cmpPrice(a: Row, b: Row, bid: Boolean): Int =
     (a.isNullAt(priceI), b.isNullAt(priceI)) match {
       case (true, true) => 0
       case (true, false) => -1
       case (false, true) => 1
       case _ =>
-        val c = cmpDouble(a.getDouble(priceI), b.getDouble(priceI))
-        if (bid) -c else c
+        val (x, y) = (a.getDouble(priceI), b.getDouble(priceI))
+        if (bid) cmpDouble(-x, -y) else cmpDouble(x, y)
     }
 
   private def sameSide(a: Row, b: Row): Boolean =
@@ -672,11 +678,4 @@ private final class BookLevels(in: StructType)
     }
     out.iterator
   }
-}
-
-private object BookLevels {
-  def outSchema(in: StructType): StructType = StructType(in.fields ++ Seq(
-    StructField("liquidity", DoubleType),
-    StructField("lvl", IntegerType, nullable = false),
-    StructField("bps", DoubleType)))
 }

@@ -367,7 +367,22 @@ class ShapeParitySpec extends AnyFunSuite {
   }
 
   test("order-book kernel equals the three-window shape at seeded instants") {
+    import spark.implicits._
+    // pair 4: NaN and null prices and a null amount on both sides,
+    // live from the fixture's start on
+    val odd = Seq[(String, Option[Double], Option[Double])](
+        ("b", Some(Double.NaN), Some(0.3)), ("b", Some(99.0), Some(0.1)),
+        ("b", None, Some(0.2)), ("b", Some(99.0), None),
+        ("s", Some(Double.NaN), Some(0.7)), ("s", Some(101.0), Some(0.1)),
+        ("s", None, Some(0.2)))
+      .zipWithIndex.map { case ((side, price, amount), i) =>
+        (OrderBookFixture.Start, 900L + i, side, price, amount,
+          graft.market.Level3Source.AliveMicros, 4)
+      }
+      .toDF("microtimestamp", "order_id", "side", "price", "amount",
+        "next_microtimestamp", "pair_id")
     val l3 = OrderBookFixture.level3(spark)
+      .unionByName(odd, allowMissingColumns = true)
     // the window shape the kernel replaced, inlined verbatim
     def reference(tsMicros: Long, maxLevels: Option[Int],
         bpsRange: Option[Double], minBid: Option[Double],
