@@ -9,11 +9,11 @@ import graft.Tables.tsMicros
   * level-3 order-event log (one row per limit-order event, with a
   * per-row temporal validity interval), mirroring the reference data
   * model `obanalytics.level3` (reference:
-  * `db/obanalytics_schema.sql:128-153`) and the level3 *builder*
-  * window-pass (reference: `db/bitfinex_schema.sql:279-468` — event_no
-  * via row_number, fill via lag(amount), forward pointer via
-  * lead(timestamp), price chains via cumulative sum of price-change
-  * flags, order reincarnation after deletion).
+  * `db/obanalytics_schema.sql:128-153`). The level3 *builder*
+  * (reference: `db/bitfinex_schema.sql:279-468` — event_no, fill,
+  * forward pointer, price chains, order reincarnation after deletion)
+  * is [[derive]], one window pass that the wire-format builders in
+  * `graft.sources` project into as well.
   *
   * Mapping (pure, stable, oracle-expressible):
   *   - order stream key  = user_id; a row with event_type='error' deletes
@@ -23,6 +23,7 @@ import graft.Tables.tsMicros
   *   - price  = value (already 2-decimal in the data; never re-rounded)
   *   - amount = event_id % 20 + 1 (exact in Double arithmetic)
   *   - pair_id = user_id % 3 + 1 (three instruments → replay partitions)
+  *   - exchange_id = `Dimensions.exchangeOfPair(pair_id)`
   *
   * ±infinity sentinels of the reference become: `next_microtimestamp =
   * ALIVE_MICROS` for "order still alive" and an `is_deleted` flag (with
@@ -42,17 +43,21 @@ object Level3Source {
     * scaled to this dataset's event spacing). */
   val EraGapMicros: Long = 2L * 3600 * 1000000
 
-  /** The per-user columns of the mapping above: pair and side. */
-  private def userCols(user: Column): Seq[Column] = Seq(
-    ((user % 3) + 1).cast("int").as("pair_id"),
-    when(user % 2 === 0, "b").otherwise("s").as("side"))
+  /** The per-user columns of the mapping above: the order stream and
+    * its id base, pair, venue and side. */
+  private def userCols(user: Column): Seq[Column] = {
+    val pair = ((user % 3) + 1).cast("int")
+    Seq(user.as("user_id"), user.as("stream"), (user * 1000).as("id_base"),
+      pair.as("pair_id"), Dimensions.exchangeOfPair(pair).as("exchange_id"),
+      when(user % 2 === 0, "b").otherwise("s").as("side"))
+  }
 
-  /** The adapter's event → order-event projection (the mapping above),
-    * the input of both window builds. */
+  /** The adapter's event → order-event projection (the mapping above):
+    * kernel rows without the carry columns. */
   private def orderEvents(events: DataFrame): DataFrame = {
     val user = col("user_id")
     events.select(Seq(col("event_id"),
-      tsMicros(col("ts")).as("microtimestamp"), user) ++ userCols(user) ++ Seq(
+      tsMicros(col("ts")).as("microtimestamp")) ++ userCols(user) ++ Seq(
       // asks priced +80 above the bid range: the two sides overlap in
       // [80, ~200] so crossed books occur but are not the norm
       when(user % 2 === 0, col("value"))
@@ -61,98 +66,125 @@ object Level3Source {
       when(col("event_type") === "error", 1).otherwise(0).as("del_flag")): _*)
   }
 
+  /** The carry columns of a source with no carried state. */
+  private val NoCarry: Seq[Column] = Seq(lit(false).as("carry"),
+    lit(null).cast("long").as("s_oid"), lit(null).cast("int").as("event_count"),
+    lit(null).cast("long").as("chain_ts"), lit(null).cast("int").as("chain_eno"))
+
+  /** The columns [[derive]] adds for [[continueBuild]]'s corrections. */
+  private val CorrectionCols = Seq("corrects", "event_count")
+
+  /** The one level3 derivation (reference
+    * `capture_transient_raw_book_events`, `db/bitfinex_schema.sql:279-468`),
+    * run by [[level3]], [[continueBuild]], `BitfinexFeed.level3FromRaw`
+    * and `BitstampFeed.level3FromLiveOrders`. Input: one row per order
+    * event with
+    *   - `stream`: the order-stream key. A stream holds one order at a
+    *     time; a deletion ends it, and the stream's next row opens a new
+    *     incarnation with `order_id = id_base + deletions before it`;
+    *   - `id_base`, `microtimestamp`, `event_id` (the order key within
+    *     the stream), `pair_id`, `exchange_id`, `side`, `price`,
+    *     `amount` (non-negative) and `del_flag` (1 = the row deletes);
+    *   - the carry columns (see [[continueBuild]]; [[NoCarry]] where
+    *     there is no carried state).
+    *
+    * ONE window over (stream; microtimestamp, event_id), so one
+    * Exchange and one Sort. Every per-order quantity comes out of the
+    * stream window because an order's rows are a contiguous run of its
+    * stream (the deletion counter is nondecreasing along the ordering):
+    *   - a row opens an incarnation iff the previous stream row deleted
+    *     (or there is none), so `lag(del_flag)` stands in for an
+    *     order-keyed repartition;
+    *   - `event_no` = stream row number − the incarnation start's row
+    *     number + 1, the start carried by a running `last(_, ignoreNulls)`;
+    *     the side is the incarnation's first row's;
+    *   - `fill` and the price-change flag are stream lags masked at
+    *     incarnation starts; the forward pointer is the stream lead,
+    *     because a non-delete row's successor is always the same order's
+    *     next event and a delete row points at itself;
+    *   - a price chain starts where the incarnation starts, the previous
+    *     price is null or the price moved; its anchor (`price_microtimestamp`,
+    *     `price_event_no`) is the running carry of the last chain start,
+    *     exact because a chain never crosses an incarnation.
+    * A carry row (`carry`) is its stream's first row and the last event
+    * of an open order: it opens the continuing incarnation, numbers it
+    * from `event_count`, and when its chain is still open the chain's
+    * anchor is the carried (`chain_ts`, `chain_eno`). Carry rows are not
+    * output; a row with `corrects` is a continuing order's first new
+    * event. Rows equal the per-order window shapes each builder had
+    * before (ShapeParitySpec, exceptAll both ways). */
+  private def derive(rows: DataFrame): DataFrame = {
+    val w = Window.partitionBy("stream").orderBy("microtimestamp", "event_id")
+    val run = w.rowsBetween(Window.unboundedPreceding, 0)
+    // pass 1: incarnation counter, row number, neighbours in the stream
+    val u = rows
+      .withColumn("order_id", col("id_base") + coalesce(sum("del_flag").over(
+        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("rn_s", row_number().over(w))
+      .withColumn("lag_del", lag("del_flag", 1).over(w))
+      .withColumn("prev_amount", lag("amount", 1).over(w))
+      .withColumn("prev_price", lag("price", 1).over(w))
+      .withColumn("lead_ts", lead("microtimestamp", 1).over(w))
+      .withColumn("inc_start", col("lag_del").isNull || col("lag_del") === 1)
+      .withColumn("price_chg", col("inc_start") ||
+        col("prev_price").isNull || col("price") =!= col("prev_price"))
+    // pass 2, same partitioning and ordering (no new Exchange or Sort):
+    // carry the incarnation-start and chain-start rows forward
+    def startOf(flag: String, c: String): Column =
+      last(when(col(flag), col(c)), ignoreNulls = true).over(run)
+    val evt = u
+      .withColumn("inc_rn", startOf("inc_start", "rn_s"))
+      .withColumn("inc_side", startOf("inc_start", "side"))
+      .withColumn("chain_rn", startOf("price_chg", "rn_s"))
+      .withColumn("chain_new_ts", startOf("price_chg", "microtimestamp"))
+      .withColumn("chain_is_carry", startOf("price_chg", "carry"))
+      .withColumn("rn", col("rn_s") - col("inc_rn") + 1)
+      .filter(!col("carry"))
+    // a continuing order numbers on from its carried event count; a
+    // chain start shares the current row's incarnation, so its event_no
+    // is the chain-start offset through the same numbering
+    val continuing = col("order_id") === col("s_oid")
+    def eventNo(rn: Column): Column =
+      when(continuing, rn + col("event_count") - 1).otherwise(rn).cast("int")
+    evt.select(
+      col("microtimestamp"),
+      col("order_id"),
+      eventNo(col("rn")).as("event_no"),
+      col("inc_side").as("side"),
+      col("price"),
+      col("amount"),
+      when(!col("inc_start") && col("prev_amount") > col("amount"),
+        col("prev_amount") - col("amount")).as("fill"),
+      when(col("del_flag") === 1, col("microtimestamp"))
+        .otherwise(coalesce(col("lead_ts"), lit(AliveMicros)))
+        .as("next_microtimestamp"),
+      (col("del_flag") === 1).as("is_deleted"),
+      when(col("chain_is_carry"), col("chain_ts"))
+        .otherwise(col("chain_new_ts")).as("price_microtimestamp"),
+      when(col("chain_is_carry"), col("chain_eno"))
+        .otherwise(eventNo(col("chain_rn") - col("inc_rn") + 1))
+        .cast("int").as("price_event_no"),
+      col("pair_id"),
+      col("exchange_id"),
+      col("event_id"),
+      // the carry row is row 1 of its order
+      (continuing && col("rn") === 2).as("corrects"),
+      col("event_count"))
+  }
+
+  /** [[derive]] for a source with no carried state: order-event rows
+    * (its input columns without the carry columns) → level3 rows. */
+  private[graft] def fromOrderEvents(rows: DataFrame): DataFrame =
+    derive(rows.select(col("*") +: NoCarry: _*)).drop(CorrectionCols: _*)
+
   /** events DataFrame (event_id, ts, user_id, event_type, value, props)
     * → level3 DataFrame with columns:
     * microtimestamp(Long µs), order_id, event_no, side, price, amount,
     * fill, next_microtimestamp(Long µs), is_deleted, price_microtimestamp,
-    * price_event_no, pair_id, exchange_id, event_id.
-    *
-    * SINGLE-EXCHANGE build (r17, guide §2.4): the builder used to pay
-    * three shuffles — user_id (incarnation counter), order_id
-    * (event_no/lag/lead), (order_id, price_group) (chain anchors) —
-    * but every per-ORDER quantity is derivable inside the USER
-    * partition, because an order's rows are a contiguous run of its
-    * user's (ts, event_id)-ordered stream (order_id = user·1000 +
-    * #deletes-before, and the delete counter is nondecreasing along
-    * exactly that ordering):
-    *   - a row opens a new incarnation iff the PREVIOUS user row was a
-    *     delete (or there is none) — so `lag(del_flag)` replaces the
-    *     order-key repartition;
-    *   - `event_no` = user row_number − row_number at the incarnation
-    *     start + 1, with the start carried by a running
-    *     `last(_, ignoreNulls)`;
-    *   - lag/lead within the order = user-window lag/lead masked at
-    *     incarnation boundaries (a non-delete row's successor is
-    *     always same-order, a delete row never needs its lead);
-    *   - the price-chain anchor (min ts / min event_no over the chain)
-    *     = the running carry of the last chain-start row — a chain
-    *     never crosses an incarnation, so the carries stay exact.
-    * Two chained WindowExecs over the SAME (user_id; ts, event_id)
-    * spec — Catalyst plans ONE Exchange + ONE Sort for both (plan
-    * audit in plans/r17/mkt_level3_*.txt; rows equal the
-    * three-shuffle build on the sf0.001 fixture by ShapeParitySpec's
-    * exceptAll both ways, and the mkt_level3 oracle row matches the
-    * DuckDB mirror in the gate runs of docs/verify/gate_log.txt). At
-    * 100 TB the build shuffles the log once instead of three times. */
-  def level3(events: DataFrame): DataFrame = {
-    val base = orderEvents(events)
-    val wUser = Window.partitionBy("user_id")
-      .orderBy("microtimestamp", "event_id")
-    val run = wUser.rowsBetween(Window.unboundedPreceding, 0)
-    // pass 1 over the user partition: incarnation counter, row number,
-    // neighbor values (masked into per-order semantics below)
-    val u = base
-      .withColumn("order_id",
-        col("user_id") * 1000 + coalesce(
-          sum("del_flag").over(
-            wUser.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("rn_u", row_number().over(wUser))
-      .withColumn("lag_del", lag("del_flag", 1).over(wUser))
-      .withColumn("prev_amount_u", lag("amount", 1).over(wUser))
-      .withColumn("prev_price_u", lag("price", 1).over(wUser))
-      .withColumn("lead_ts_u", lead("microtimestamp", 1).over(wUser))
-      // new incarnation starts where the previous user row deleted (or
-      // at the user's first row); a price chain starts there too, or
-      // wherever the price moved within the incarnation
-      .withColumn("inc_start",
-        col("lag_del").isNull || col("lag_del") === 1)
-      .withColumn("price_chg",
-        when(col("inc_start") ||
-          col("price") =!= col("prev_price_u"), 1).otherwise(0))
-    // pass 2, same partitioning and ordering (no new Exchange/Sort):
-    // carry the incarnation-start and chain-start row numbers/ts
-    val evt = u
-      .withColumn("inc_start_rn",
-        last(when(col("inc_start"), col("rn_u")), ignoreNulls = true)
-          .over(run))
-      .withColumn("chain_rn",
-        last(when(col("price_chg") === 1, col("rn_u")), ignoreNulls = true)
-          .over(run))
-      .withColumn("chain_ts",
-        last(when(col("price_chg") === 1, col("microtimestamp")),
-          ignoreNulls = true).over(run))
-    evt.select(
-      col("microtimestamp"),
-      col("order_id"),
-      (col("rn_u") - col("inc_start_rn") + 1).as("event_no"),
-      col("side"),
-      col("price"),
-      col("amount"),
-      when(!col("inc_start") && col("prev_amount_u") > col("amount"),
-        col("prev_amount_u") - col("amount")).as("fill"),
-      // a non-delete row's next user row is always the same order's
-      // next event (the incarnation can only change after a delete),
-      // so the user-window lead IS the order-window lead here
-      when(col("del_flag") === 1, col("microtimestamp"))
-        .otherwise(coalesce(col("lead_ts_u"), lit(AliveMicros)))
-        .as("next_microtimestamp"),
-      (col("del_flag") === 1).as("is_deleted"),
-      col("chain_ts").as("price_microtimestamp"),
-      (col("chain_rn") - col("inc_start_rn") + 1).as("price_event_no"),
-      col("pair_id"),
-      Dimensions.exchangeOfPair(col("pair_id")).as("exchange_id"),
-      col("event_id"))
-  }
+    * price_event_no, pair_id, exchange_id, event_id. The order stream
+    * is the user, with id base `user_id·1000` (see [[derive]]). */
+  def level3(events: DataFrame): DataFrame =
+    fromOrderEvents(orderEvents(events))
 
   /** Carry state for incremental (batch-at-a-time) building — the
     * month-boundary chain continuation of the reference (`v_open_orders`,
@@ -185,15 +217,16 @@ object Level3Source {
     * order at its first new event — the immutable form of the
     * reference's `level3_incorporate_new_event` trigger. The carry
     * mechanism: each open order's last event is prepended as a silent
-    * carry row so the one window pass continues chains, numbering and
-    * fills across the boundary. */
+    * carry row so the one window pass of [[derive]] continues chains,
+    * numbering and fills across the boundary. A carry row is its
+    * user's first row here because its ts is ≤ the batch cut and every
+    * batch event is later (the caller feeds disjoint, ascending
+    * batches; [[incrementalLevel3]] splits on ts ≤/> cut). */
   def continueBuild(events: DataFrame, state: DataFrame)
       : (DataFrame, DataFrame) = {
-    val base = orderEvents(events).withColumn("carry", lit(false))
     val carryRows = state.filter(col("order_id").isNotNull).select(
       Seq(lit(-1L).as("event_id"),
-        col("last_ts").as("microtimestamp"),
-        col("user_id")) ++ userCols(col("user_id")) ++
+        col("last_ts").as("microtimestamp")) ++ userCols(col("user_id")) ++
       Seq(col("last_price").as("price"),
         col("last_amount").as("amount"),
         lit(0).as("del_flag"),
@@ -208,116 +241,18 @@ object Level3Source {
       .agg(max("del_base").as("del_base"), max("s_oid").as("s_oid"),
         max("event_count").as("event_count"), max("chain_ts").as("chain_ts"),
         max("chain_eno").as("chain_eno"))
-    // SINGLE-EXCHANGE incremental build (r18, guide §2.4 — the carry-
-    // row-aware form of the r17 [[level3]] derivation; judge r17 #4):
-    // the batch used to pay THREE window partitionings (user_id →
-    // order_id → (order_id, price_group), i.e. 2 Exchanges + 3 Sorts).
-    // The r17 contiguity argument extends to carry rows because a
-    // carry row is always its user's FIRST row in this batch — its ts
-    // is the open order's last event ts ≤ the batch cut, and every
-    // batch event is strictly later (the caller feeds disjoint,
-    // ascending batches; [[incrementalLevel3]] splits on ts ≤/> cut) —
-    // so per user the stream is [carry?] ++ new events, orders remain
-    // contiguous runs (delete counter nondecreasing along the same
-    // (ts, event_id) ordering), and every per-order/per-chain quantity
-    // is a masked lag/lead or running carry inside the ONE user
-    // window. The carry row opens the continuing incarnation (its
-    // del_flag = 0, so the next real row is the SAME order), and since
-    // a carry always starts a price chain (first row ⇒ price_chg = 1),
-    // "the chain containing the carry" ≡ "the chain whose start row IS
-    // the carry" — one more running carry of the start row's `carry`
-    // flag. Rows equal the three-window shape on the sf0.001 fixture
-    // at the snapshot cut (ShapeParitySpec: exceptAll both ways on
-    // newRows AND corrections); the mkt_level3_incr oracle row shows
-    // only that the assembled incremental build equals the full one
-    // (DuckDB mirror, sf0.001 gate run in docs/verify/gate_log.txt).
-    val wUser = Window.partitionBy("user_id")
-      .orderBy("microtimestamp", "event_id")
-    val run = wUser.rowsBetween(Window.unboundedPreceding, 0)
-    val all = base.unionByName(carryRows)
-      .join(st, col("user_id") === col("s_user"), "left")
-    // pass 1 over the user partition: incarnation counter, row number,
-    // neighbor values (masked into per-order semantics below)
-    val u = all
-      .withColumn("order_id",
-        col("user_id") * 1000 + coalesce(col("del_base"), lit(0L)) +
-          coalesce(sum("del_flag").over(
-            wUser.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("rn_u", row_number().over(wUser))
-      .withColumn("lag_del", lag("del_flag", 1).over(wUser))
-      .withColumn("prev_amount_u", lag("amount", 1).over(wUser))
-      .withColumn("prev_price_u", lag("price", 1).over(wUser))
-      .withColumn("lead_ts_u", lead("microtimestamp", 1).over(wUser))
-      .withColumn("inc_start",
-        col("lag_del").isNull || col("lag_del") === 1)
-      .withColumn("price_chg",
-        when(col("inc_start") ||
-          col("price") =!= col("prev_price_u"), 1).otherwise(0))
-    val continuing = col("order_id") === col("s_oid")
-    // pass 2, same partitioning and ordering (no new Exchange/Sort):
-    // carry the incarnation-start and chain-start row facts forward
-    val evt = u
-      .withColumn("inc_start_rn",
-        last(when(col("inc_start"), col("rn_u")), ignoreNulls = true)
-          .over(run))
-      .withColumn("chain_rn",
-        last(when(col("price_chg") === 1, col("rn_u")), ignoreNulls = true)
-          .over(run))
-      .withColumn("chain_new_ts",
-        last(when(col("price_chg") === 1, col("microtimestamp")),
-          ignoreNulls = true).over(run))
-      .withColumn("chain_is_carry",
-        last(when(col("price_chg") === 1, col("carry")), ignoreNulls = true)
-          .over(run))
-      // row number within the order (the old wOrd row_number): the
-      // carry row, when present, is row 1 of the continuing order
-      .withColumn("rn",
-        col("rn_u") - col("inc_start_rn") + 1)
-      .withColumn("event_no",
-        when(continuing, col("rn") + col("event_count") - 1)
-          .otherwise(col("rn")).cast("int"))
-      .filter(!col("carry"))
+    val evt = derive(orderEvents(events).withColumn("carry", lit(false))
+        .unionByName(carryRows)
+        // on the stream, so the window reuses the join's partitioning
+        .join(st, col("stream") === col("s_user"), "left")
+        .withColumn("id_base",
+          col("id_base") + coalesce(col("del_base"), lit(0L))))
       // feeds newRows AND the pointer corrections — one evaluation (r17)
       .localCheckpoint(false)
-    // event_no of a chain's start row = the chain-start offset pushed
-    // through the same per-order numbering as the current row (chains
-    // never cross an incarnation, so both share inc_start_rn and the
-    // continuing status)
-    val chainStartEno =
-      when(continuing,
-        col("chain_rn") - col("inc_start_rn") + col("event_count"))
-        .otherwise(col("chain_rn") - col("inc_start_rn") + 1)
-    val newRows = evt.select(
-      col("microtimestamp"),
-      col("order_id"),
-      col("event_no"),
-      col("side"),
-      col("price"),
-      col("amount"),
-      // the first row of a FRESH incarnation has no predecessor (old
-      // shape: order-window lag = null); within an order the user-
-      // window lag IS the order-window lag (contiguity), and the
-      // continuing order's first real row sees the carry's amount
-      when(!col("inc_start") && col("prev_amount_u") > col("amount"),
-        col("prev_amount_u") - col("amount")).as("fill"),
-      // a non-delete row's next user row is always the same order's
-      // next event (the incarnation can only change after a delete)
-      when(col("del_flag") === 1, col("microtimestamp"))
-        .otherwise(coalesce(col("lead_ts_u"), lit(AliveMicros)))
-        .as("next_microtimestamp"),
-      (col("del_flag") === 1).as("is_deleted"),
-      when(col("chain_is_carry"), col("chain_ts"))
-        .otherwise(col("chain_new_ts")).as("price_microtimestamp"),
-      when(col("chain_is_carry"), col("chain_eno"))
-        .otherwise(chainStartEno).cast("int").as("price_event_no"),
-      col("pair_id"),
-      Dimensions.exchangeOfPair(col("pair_id")).as("exchange_id"),
-      col("event_id"))
-    val corrections = evt
-      .filter(continuing && col("rn") === 2) // first real event after carry
-      .select(col("order_id"), (col("event_count")).as("event_no"),
+    val corrections = evt.filter(col("corrects"))
+      .select(col("order_id"), col("event_count").as("event_no"),
         col("microtimestamp").as("new_next"))
-    (newRows, corrections)
+    (evt.drop(CorrectionCols: _*), corrections)
   }
 
   /** Incremental end-to-end: build events ≤ `cutMicros`, carry the open

@@ -1,6 +1,6 @@
 package graft.market
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.expressions.Window
@@ -105,6 +105,19 @@ object MarketOps {
       .as[SlicedEvent]
   }
 
+  /** Replays each (pair, slice) group of `events` in (ts, event_id)
+    * order through `kernel` (pair, sorted events). */
+  private def replaySlices[U: Encoder](events: Dataset[SlicedEvent])(
+      kernel: (Int, Iterator[SlicedEvent]) => Iterator[U]): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.groupByKey(e => (e.pairId, e.slice))
+      .flatMapSortedGroups(col("ts"), col("event_id")) { case ((pair, _), it) =>
+        kernel(pair, it)
+      }
+      .toDF()
+  }
+
   /** Level-1 spread stream: (pair_id, ts, bid/ask price+qty), one row per
     * episode where the quote changed (reference: `spread_by_episode_fast`,
     * `db/c/obadiah_db/obadiah_db.cpp:270-363`). Runs as seeded
@@ -113,12 +126,7 @@ object MarketOps {
   def spread(level3: DataFrame, spark: SparkSession,
       sliceMicros: Long = DefaultSliceMicros): DataFrame = {
     import spark.implicits._
-    slicedEvents(level3, spark, sliceMicros)
-      .groupByKey(e => (e.pairId, e.slice))
-      .flatMapSortedGroups($"ts", $"event_id") { case ((pair, _), it) =>
-        Replay.l1Sliced(pair, it)
-      }
-      .toDF()
+    replaySlices(slicedEvents(level3, spark, sliceMicros))(Replay.l1Sliced)
   }
 
   /** Single-group-per-pair twin of [[spread]] (differential testing). */
@@ -135,12 +143,7 @@ object MarketOps {
   def depthChanges(level3: DataFrame, spark: SparkSession,
       sliceMicros: Long = DefaultSliceMicros): DataFrame = {
     import spark.implicits._
-    slicedEvents(level3, spark, sliceMicros)
-      .groupByKey(e => (e.pairId, e.slice))
-      .flatMapSortedGroups($"ts", $"event_id") { case ((pair, _), it) =>
-        Replay.l2Sliced(pair, it)
-      }
-      .toDF()
+    replaySlices(slicedEvents(level3, spark, sliceMicros))(Replay.l2Sliced)
   }
 
   /** [[depthChanges]] at a level2 precision tier — the reference's
@@ -159,18 +162,27 @@ object MarketOps {
     * rules are identical at every precision. */
   def depthChangesAtPrecision(level3: DataFrame, spark: SparkSession,
       precision: String,
-      sliceMicros: Long = DefaultSliceMicros): DataFrame = {
+      sliceMicros: Long = DefaultSliceMicros): DataFrame =
+    depthChanges(atPrecision(level3, precision), spark, sliceMicros)
+
+  /** `precision` lower-cased, if it names a level2 tier (`r0`, `p0`..`p4`);
+    * otherwise fails. The depth operators and the level2 lake's writer
+    * and reader all take their tier through here. */
+  private[graft] def precisionTier(precision: String): String = {
     val p = precision.toLowerCase
     require(Set("r0", "p0", "p1", "p2", "p3", "p4")(p),
       s"invalid precision: $precision. Valid values are r0, p0, p1, p2, p3, p4")
-    if (p == "r0" || p == "p0") depthChanges(level3, spark, sliceMicros)
-    else {
-      val n = p.substring(1).toInt
-      val rounded = level3.withColumn("price",
-        Dimensions.roundPriceCoarser(col("pair_id"), col("price"), n))
-      depthChanges(rounded, spark, sliceMicros)
-    }
+    p
   }
+
+  /** level3 with prices on the `precision` tier's grid: unchanged at
+    * `r0`/`p0`, rounded N digits coarser than the pair's `R0` at `pN`. */
+  private def atPrecision(level3: DataFrame, precision: String): DataFrame =
+    precisionTier(precision) match {
+      case "r0" | "p0" => level3
+      case p => level3.withColumn("price", Dimensions.roundPriceCoarser(
+        col("pair_id"), col("price"), p.substring(1).toInt))
+    }
 
   /** [[depthWindow]] at a coarser precision tier: prices rounded
     * BEFORE replay exactly as [[depthChangesAtPrecision]] (the tier is
@@ -181,18 +193,8 @@ object MarketOps {
     * `db/get_schema.sql:239-245`). */
   def depthWindowAtPrecision(level3: DataFrame, spark: SparkSession,
       t0: Long, t1: Long, precision: String,
-      sliceMicros: Long = DefaultSliceMicros): DataFrame = {
-    val p = precision.toLowerCase
-    require(Set("r0", "p0", "p1", "p2", "p3", "p4")(p),
-      s"invalid precision: $precision. Valid values are r0, p0, p1, p2, p3, p4")
-    if (p == "r0" || p == "p0") depthWindow(level3, spark, t0, t1, sliceMicros)
-    else {
-      val n = p.substring(1).toInt
-      val rounded = level3.withColumn("price",
-        Dimensions.roundPriceCoarser(col("pair_id"), col("price"), n))
-      depthWindow(rounded, spark, t0, t1, sliceMicros)
-    }
-  }
+      sliceMicros: Long = DefaultSliceMicros): DataFrame =
+    depthWindow(atPrecision(level3, precision), spark, t0, t1, sliceMicros)
 
   /** Single-group-per-pair twin of [[depthChanges]] (differential testing). */
   private[graft] def depthChangesUnsliced(level3: DataFrame, spark: SparkSession): DataFrame = {
@@ -208,12 +210,8 @@ object MarketOps {
   def tradingPeriod(level3: DataFrame, spark: SparkSession,
       volumeUnits: Long, sliceMicros: Long = DefaultSliceMicros): DataFrame = {
     import spark.implicits._
-    slicedEvents(level3, spark, sliceMicros)
-      .groupByKey(e => (e.pairId, e.slice))
-      .flatMapSortedGroups($"ts", $"event_id") { case ((pair, _), it) =>
-        Replay.tradingPeriodSliced(pair, it, volumeUnits)
-      }
-      .toDF()
+    replaySlices(slicedEvents(level3, spark, sliceMicros))(
+      Replay.tradingPeriodSliced(_, _, volumeUnits))
   }
 
   /** L1 ticks annotated with the era they fall into — the parallel unit
@@ -310,15 +308,10 @@ object MarketOps {
   def depthChangesWindow(level3: DataFrame, spark: SparkSession,
       t0: Long, t1: Long, sliceMicros: Long = DefaultSliceMicros): DataFrame = {
     import spark.implicits._
-    slicedEvents(level3, spark, sliceMicros)
-      // slice s owns episodes in (s·W, (s+1)·W] — keep s touching (t0, t1]
+    // slice s owns episodes in (s·W, (s+1)·W] — keep s touching (t0, t1]
+    replaySlices(slicedEvents(level3, spark, sliceMicros)
       .where(col("slice") >= t0 / sliceMicros &&
-        col("slice") <= (t1 - 1) / sliceMicros)
-      .groupByKey(e => (e.pairId, e.slice))
-      .flatMapSortedGroups($"ts", $"event_id") { case ((pair, _), it) =>
-        Replay.l2Sliced(pair, it)
-      }
-      .toDF()
+        col("slice") <= (t1 - 1) / sliceMicros))(Replay.l2Sliced)
       .filter(col("ts") > t0 && col("ts") <= t1)
       .select(col("pair_id").cast("long").as("pair_id"), col("ts"),
         when(col("side") === "b", "bid").otherwise("ask").as("side"),

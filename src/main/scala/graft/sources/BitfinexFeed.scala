@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.market.Level3Source
+import graft.market.{Dimensions, Level3Source}
 
 /** Bitfinex R0 book-channel connector — the exchange-format tier the
   * reference captures with asyncio websockets
@@ -125,10 +125,8 @@ object BitfinexFeed {
       .select(
         // `round(abs(qty), fmu), round(price, price_precision)` —
         // reference `db/bitfinex_schema.sql:487`
-        graft.market.Dimensions.roundAmount(col("pair_id"),
-          abs(col("qty"))).as("amount"),
-        graft.market.Dimensions.roundPrice(col("pair_id"), col("price"))
-          .as("price"),
+        Dimensions.roundAmount(col("pair_id"), abs(col("qty"))).as("amount"),
+        Dimensions.roundPrice(col("pair_id"), col("price")).as("price"),
         when(col("qty") < 0, "s").otherwise("b").as("side"),
         col("exchange_timestamp").as("microtimestamp"),
         col("local_timestamp"), col("pair_id"),
@@ -137,63 +135,36 @@ object BitfinexFeed {
 
   /** The level3 builder over the *native feed shape* (reference
     * `bitfinex.capture_transient_raw_book_events`,
-    * `db/bitfinex_schema.sql:279-468`): side from the sign of the
-    * order's first amount (Bitfinex convention: +amount bid, −amount
-    * ask), zero price = deletion, later reappearance of an order_id is
-    * a reincarnation (fresh chain), `event_no`/`fill`/forward pointers/
-    * price chains from one window pass. Timestamps are episode-grained
-    * (`microtimestamp = episode_timestamp`), as the reference. */
+    * `db/bitfinex_schema.sql:279-468`): a projection into the one
+    * level3 derivation, `Level3Source.fromOrderEvents`. It projects
+    *   - price and amount rounded on ingest by the pair's R0 and fmu
+    *     (`db/bitfinex_schema.sql:352`): a real feed carries
+    *     sub-precision float noise, and price chains, fill arithmetic
+    *     and dedupe assume normalized values;
+    *   - `|amount|`, and the side from its sign (Bitfinex convention:
+    *     +amount bid, −amount ask; the derivation keeps each
+    *     incarnation's first side);
+    *   - zero price = deletion; a later reappearance of an order_id is a
+    *     reincarnation, numbered on from the id base `order_id·1000`;
+    *   - the order stream (pair_id, order_id), ordered by
+    *     (`episode_timestamp`, `local_timestamp`): timestamps are
+    *     episode-grained (`microtimestamp = episode_timestamp`), as the
+    *     reference, and `event_id = local_timestamp`. */
   def level3FromRaw(raw: DataFrame): DataFrame = {
-    val wOrd0 = Window.partitionBy("pair_id", "order_id")
-      .orderBy("episode_timestamp", "local_timestamp")
-    // capture-time R0/fmu normalization (reference rounds price by the
-    // pair's price precision and amount by its fmu on ingest,
-    // `db/bitfinex_schema.sql:352`) — a real feed carries
-    // sub-precision float noise; everything downstream (price chains,
-    // fill arithmetic, dedupe) assumes normalized values
-    val base = raw
-      .withColumn("price",
-        graft.market.Dimensions.roundPrice(col("pair_id"), col("price")))
-      .withColumn("amount",
-        graft.market.Dimensions.roundAmount(col("pair_id"), col("amount")))
-      .withColumn("del_flag", when(col("price") === 0.0, 1).otherwise(0))
-      .withColumn("incarnation",
-        coalesce(sum("del_flag").over(
-          wOrd0.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val wOrd = Window.partitionBy("pair_id", "order_id", "incarnation")
-      .orderBy("episode_timestamp", "local_timestamp")
-    val evt = base
-      .withColumn("event_no", row_number().over(wOrd))
-      .withColumn("side",
-        when(first(col("amount")).over(wOrd) > 0, "b").otherwise("s"))
-      .withColumn("abs_amount", abs(col("amount")))
-      .withColumn("prev_amount", lag("abs_amount", 1).over(wOrd))
-      .withColumn("lead_ts", lead("episode_timestamp", 1).over(wOrd))
-      .withColumn("prev_price", lag("price", 1).over(wOrd))
-      .withColumn("price_chg",
-        when(col("prev_price").isNull || col("price") =!= col("prev_price"), 1)
-          .otherwise(0))
-      .withColumn("price_group",
-        sum("price_chg").over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
-    val wChain = Window.partitionBy("pair_id", "order_id", "incarnation",
-      "price_group")
-    evt.select(
-      col("episode_timestamp").as("microtimestamp"),
-      (col("order_id") * 1000 + col("incarnation")).as("order_id"),
-      col("event_no"),
-      col("side"),
-      col("price"),
-      col("abs_amount").as("amount"),
-      when(col("prev_amount") > col("abs_amount"),
-        col("prev_amount") - col("abs_amount")).as("fill"),
-      when(col("del_flag") === 1, col("episode_timestamp"))
-        .otherwise(coalesce(col("lead_ts"), lit(Level3Source.AliveMicros)))
-        .as("next_microtimestamp"),
-      (col("del_flag") === 1).as("is_deleted"),
-      min("episode_timestamp").over(wChain).as("price_microtimestamp"),
-      min("event_no").over(wChain).as("price_event_no"),
-      col("pair_id"),
-      lit(1).as("exchange_id"),
-      col("local_timestamp").as("event_id"))
+    val amount = Dimensions.roundAmount(col("pair_id"), col("amount"))
+    val price = Dimensions.roundPrice(col("pair_id"), col("price"))
+    Level3Source.fromOrderEvents(raw
+      .withColumn("amount", amount)
+      .withColumn("price", price)
+      .select(struct(col("pair_id"), col("order_id")).as("stream"),
+        (col("order_id") * 1000).as("id_base"),
+        col("episode_timestamp").as("microtimestamp"),
+        col("local_timestamp").as("event_id"),
+        col("pair_id"),
+        lit(1).as("exchange_id"),
+        when(col("amount") > 0, "b").otherwise("s").as("side"),
+        col("price"),
+        abs(col("amount")).as("amount"),
+        when(col("price") === 0.0, 1).otherwise(0).as("del_flag")))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
-import graft.market.Level3Source
+import graft.market.{Dimensions, Level3Source}
 
 /** Bitstamp wire-format connector — the second exchange dialect
   * (reference `python/obadiah/bitstamp.py:37-120`): JSON *objects* per
@@ -64,50 +64,28 @@ object BitstampFeed {
         col("m.data.buy_order_id"), col("m.data.sell_order_id"))
 
   /** live_orders → level3 (the `move_events` transfer,
-    * `db/bitstamp_schema.sql:1381-1448`, on the immutable path): Bitstamp
-    * reports explicit event types, so `is_deleted` comes from
-    * `order_deleted` rather than a zero price, and order ids are
-    * exchange-unique (no reincarnation numbering). */
-  def level3FromLiveOrders(orders: DataFrame): DataFrame = {
-    val wOrd = Window.partitionBy("pair_id", "order_id")
-      .orderBy("microtimestamp", "local_timestamp")
-    // capture-time R0/fmu normalization, as the Bitfinex path
-    // (`db/bitfinex_schema.sql:352`; pairs seed
-    // `db/obanalytics_pairs.sql:63-74`)
-    val evt = orders
-      .withColumn("price",
-        graft.market.Dimensions.roundPrice(col("pair_id"), col("price")))
-      .withColumn("amount",
-        graft.market.Dimensions.roundAmount(col("pair_id"), col("amount")))
-      .withColumn("del_flag",
-        when(col("event") === "order_deleted", 1).otherwise(0))
-      .withColumn("event_no", row_number().over(wOrd))
-      .withColumn("prev_amount", lag("amount", 1).over(wOrd))
-      .withColumn("lead_ts", lead("microtimestamp", 1).over(wOrd))
-      .withColumn("prev_price", lag("price", 1).over(wOrd))
-      .withColumn("price_chg",
-        when(col("prev_price").isNull || col("price") =!= col("prev_price"), 1)
-          .otherwise(0))
-      .withColumn("price_group",
-        sum("price_chg").over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
-    val wChain = Window.partitionBy("pair_id", "order_id", "price_group")
-    evt.select(
-      col("microtimestamp"),
-      col("order_id"),
-      col("event_no"),
-      col("side"),
-      col("price"),
-      col("amount"),
-      when(col("prev_amount") > col("amount"),
-        col("prev_amount") - col("amount")).as("fill"),
-      when(col("del_flag") === 1, col("microtimestamp"))
-        .otherwise(coalesce(col("lead_ts"), lit(Level3Source.AliveMicros)))
-        .as("next_microtimestamp"),
-      (col("del_flag") === 1).as("is_deleted"),
-      min("microtimestamp").over(wChain).as("price_microtimestamp"),
-      min("event_no").over(wChain).as("price_event_no"),
-      col("pair_id"),
-      lit(2).as("exchange_id"), // bitstamp = 2 in the reference seed
-      col("local_timestamp").as("event_id"))
-  }
+    * `db/bitstamp_schema.sql:1381-1448`, on the immutable path): a
+    * projection into the one level3 derivation,
+    * `Level3Source.fromOrderEvents`. It projects price and amount
+    * rounded on ingest by the pair's R0 and fmu, as the Bitfinex path
+    * (`db/bitfinex_schema.sql:352`; pairs seed
+    * `db/obanalytics_pairs.sql:63-74`), `del_flag` from `order_deleted`
+    * (Bitstamp reports explicit event types, not a zero price), and the
+    * order stream (pair_id, order_id) ordered by (`microtimestamp`,
+    * `local_timestamp`) with `event_id = local_timestamp`. Order ids
+    * are exchange-unique and an order never reappears after its
+    * deletion, so ids pass through unchanged (id base = `order_id`). */
+  def level3FromLiveOrders(orders: DataFrame): DataFrame =
+    Level3Source.fromOrderEvents(orders
+      .select(struct(col("pair_id"), col("order_id")).as("stream"),
+        col("order_id").as("id_base"),
+        col("microtimestamp"),
+        col("local_timestamp").as("event_id"),
+        col("pair_id"),
+        lit(2).as("exchange_id"), // bitstamp = 2 in the reference seed
+        col("side"),
+        Dimensions.roundPrice(col("pair_id"), col("price")).as("price"),
+        Dimensions.roundAmount(col("pair_id"), col("amount")).as("amount"),
+        when(col("event") === "order_deleted", 1).otherwise(0)
+          .as("del_flag")))
 }

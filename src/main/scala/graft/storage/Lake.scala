@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.market.MarketOps
 
 /** Parquet-lake layout for the canonical tables (SURVEY §1.3): the
   * Spark translation of the reference's four-level declarative
@@ -148,12 +149,14 @@ object Lake {
     * appends safe); a full-tier refresh that must also DROP months no
     * longer produced should delete the tier's `precision=` subtree
     * first. Input: the `(pair_id, ts, side, price, volume)` change
-    * stream of the depth writer. */
+    * stream of the depth writer. The tier name is case-insensitive and
+    * lands lower-cased; an unknown tier fails before anything is
+    * written. */
   def writeLevel2(changes: DataFrame, path: String, precision: String,
       exchangeId: Int = 1): Unit =
     changes
       .withColumn("exchange_id", lit(exchangeId))
-      .withColumn("precision", lit(precision))
+      .withColumn("precision", lit(MarketOps.precisionTier(precision)))
       .withColumn("month",
         date_format(timestamp_micros(col("ts")), "yyyy-MM"))
       .repartition(col("exchange_id"), col("pair_id"), col("month"))
@@ -169,7 +172,7 @@ object Lake {
   def readLevel2(spark: SparkSession, path: String,
       precision: String): DataFrame =
     spark.read.parquet(path)
-      .filter(col("precision") === precision)
+      .filter(col("precision") === MarketOps.precisionTier(precision))
       .withColumn("exchange_id", col("exchange_id").cast("int"))
       .withColumn("pair_id", col("pair_id").cast("int"))
       .drop("month", "precision")

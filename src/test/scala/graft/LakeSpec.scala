@@ -135,6 +135,25 @@ class LakeSpec extends AnyFunSuite {
     // (dynamic partition overwrite) did not clobber the first tier
     assert(rows(Lake.readLevel2(spark, path, "r0")) == rows(r0))
     assert(rows(Lake.readLevel2(spark, path, "p2")) == rows(p2))
+    // tier names are case-insensitive: "P2" rewrites the p2 tier in
+    // place and reads it back, and no second subtree appears
+    Lake.writeLevel2(p2, path, "P2")
+    assert(rows(Lake.readLevel2(spark, path, "p2")) == rows(p2))
+    assert(rows(Lake.readLevel2(spark, path, "P2")) == rows(p2))
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    val tiers = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("precision=")).toSet
+    } finally walk.close()
+    assert(tiers == Set("precision=r0", "precision=p2"), tiers)
+    // an unknown tier fails before any file is written
+    val p9 = s"$path-p9"
+    val err = intercept[IllegalArgumentException](Lake.writeLevel2(p2, p9, "p9"))
+    assert(err.getMessage.contains(
+      "invalid precision: p9. Valid values are r0, p0, p1, p2, p3, p4"))
+    assert(!new java.io.File(p9).exists())
+    intercept[IllegalArgumentException](Lake.readLevel2(spark, path, "p9"))
     // and the tier filter prunes at the partition level
     val plan = spark.read.parquet(path).filter(col("precision") === "p2")
       .queryExecution.executedPlan.toString

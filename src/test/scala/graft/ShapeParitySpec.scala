@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.Tables.tsMicros
@@ -437,5 +441,243 @@ class ShapeParitySpec extends AnyFunSuite {
     }
     assert(oneSided > 0, "no instant with pair 3's one-sided book")
     assert(ties > 0, "no instant with equal price and microtimestamp")
+  }
+
+  private val t0 = 1569546956000L // ms
+
+  // Bitfinex wire frames: a multi-order snapshot episode with
+  // sub-precision noise; an episode of equal episode timestamps with a
+  // partial fill, a mid-order price change and a delete of 101 at price
+  // 0; 101 reappearing (twice) under the same id; ask 104 whose first
+  // amount is negative and whose sign flips later; noise that rounds
+  // away and noise that moves the price; order 105 with a null price
+  // mid-order (a chain restarts after it); order id 101 on a second
+  // pair.
+  private lazy val bitfinexRaw = {
+    import spark.implicits._
+    def upd(lts: Long, oid: Long, price: String, amount: String, rtsMs: Long) =
+      (1, 17082, lts, s"""[17082, [$oid, $price, $amount], $rtsMs]""")
+    Seq(
+      (1, 17082, 1000L, s"""[17082, [[101, 7989.004999, 1.000000004], """ +
+        s"""[102, 7990.2349999, -2.49999999949], [103, 7991, -0.5]], $t0]"""),
+      (1, 17082, 1500L, s"""[17082, "hb", ${t0 + 100}]"""),
+      upd(2000L, 101, "7989", "0.6", t0 + 1000),
+      upd(2100L, 102, "7991.5", "-2.5", t0 + 1000),
+      upd(2200L, 102, "7991.5", "-1.0", t0 + 1000),
+      upd(2300L, 101, "0", "0.6", t0 + 1000),
+      upd(3000L, 101, "7988", "2", t0 + 2000),
+      upd(3100L, 104, "7995", "-1", t0 + 2000),
+      upd(3200L, 104, "7995", "0.5", t0 + 2000),
+      upd(3250L, 105, "7996", "-1", t0 + 2000),
+      upd(3260L, 105, "null", "-1", t0 + 2000),
+      upd(3270L, 105, "7996", "-0.5", t0 + 2000),
+      upd(3300L, 103, "0", "-0.5", t0 + 2500),
+      upd(4000L, 101, "0", "2", t0 + 3000),
+      upd(5000L, 101, "7987", "1", t0 + 4000),
+      upd(5100L, 101, "7987.001", "0.999999999", t0 + 4500),
+      upd(5200L, 101, "7987.006", "0.5", t0 + 5000),
+      (3, 17083, 1500L, s"""[17083, [101, 200.5, -3], ${t0 + 500}]"""),
+      (3, 17083, 2500L, s"""[17083, [101, 200.5, -1], ${t0 + 1500}]"""))
+      .toDF("pair_id", "channel_id", "local_timestamp", "message")
+  }
+
+  test("level3FromRaw through the one kernel equals its three-window shape") {
+    val raw = graft.sources.BitfinexFeed.rawBookEvents(bitfinexRaw)
+      .localCheckpoint(false)
+    // the three-window builder the kernel replaced, inlined verbatim
+    val wOrd0 = Window.partitionBy("pair_id", "order_id")
+      .orderBy("episode_timestamp", "local_timestamp")
+    val base = raw
+      .withColumn("price",
+        graft.market.Dimensions.roundPrice(col("pair_id"), col("price")))
+      .withColumn("amount",
+        graft.market.Dimensions.roundAmount(col("pair_id"), col("amount")))
+      .withColumn("del_flag", when(col("price") === 0.0, 1).otherwise(0))
+      .withColumn("incarnation",
+        coalesce(sum("del_flag").over(
+          wOrd0.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val wOrd = Window.partitionBy("pair_id", "order_id", "incarnation")
+      .orderBy("episode_timestamp", "local_timestamp")
+    val evt = base
+      .withColumn("event_no", row_number().over(wOrd))
+      .withColumn("side",
+        when(first(col("amount")).over(wOrd) > 0, "b").otherwise("s"))
+      .withColumn("abs_amount", abs(col("amount")))
+      .withColumn("prev_amount", lag("abs_amount", 1).over(wOrd))
+      .withColumn("lead_ts", lead("episode_timestamp", 1).over(wOrd))
+      .withColumn("prev_price", lag("price", 1).over(wOrd))
+      .withColumn("price_chg",
+        when(col("prev_price").isNull || col("price") =!= col("prev_price"), 1)
+          .otherwise(0))
+      .withColumn("price_group",
+        sum("price_chg").over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
+    val wChain = Window.partitionBy("pair_id", "order_id", "incarnation",
+      "price_group")
+    val reference = evt.select(
+      col("episode_timestamp").as("microtimestamp"),
+      (col("order_id") * 1000 + col("incarnation")).as("order_id"),
+      col("event_no"),
+      col("side"),
+      col("price"),
+      col("abs_amount").as("amount"),
+      when(col("prev_amount") > col("abs_amount"),
+        col("prev_amount") - col("abs_amount")).as("fill"),
+      when(col("del_flag") === 1, col("episode_timestamp"))
+        .otherwise(coalesce(col("lead_ts"),
+          lit(graft.market.Level3Source.AliveMicros)))
+        .as("next_microtimestamp"),
+      (col("del_flag") === 1).as("is_deleted"),
+      min("episode_timestamp").over(wChain).as("price_microtimestamp"),
+      min("event_no").over(wChain).as("price_event_no"),
+      col("pair_id"),
+      lit(1).as("exchange_id"),
+      col("local_timestamp").as("event_id"))
+    val got = graft.sources.BitfinexFeed.level3FromRaw(raw)
+    assertSameRows(reference, got)
+    // the crafted cases are present: three incarnations of 101 on pair
+    // 1, ask 104 kept its first side, 101 on pair 3 is its own order
+    assert(got.filter(col("pair_id") === 1 && col("order_id") === 101002L)
+      .count() == 3)
+    assert(got.filter(col("order_id") === 104000L)
+      .select("side").distinct().collect().map(_.getString(0)).toSeq ==
+      Seq("s"))
+    assert(got.filter(col("pair_id") === 3 && col("order_id") === 101000L)
+      .agg(max("event_no")).head().getInt(0) == 2)
+    assert(got.filter(col("order_id") === 105000L).orderBy("event_no")
+      .select("price_event_no").collect().map(_.getInt(0)).toSeq ==
+      Seq(1, 1, 3))
+  }
+
+  test("level3FromLiveOrders through the one kernel equals its window shape") {
+    import spark.implicits._
+    def of(pair: Int, lts: Long, ev: String, ts: Long, amt: String,
+        price: String, id: Long, ot: Int) =
+      (pair, lts, s"""{"event": "$ev", "channel": "live_orders_btcusd", """ +
+        s""""data": {"microtimestamp": "$ts", "datetime": "${ts / 1000000}", """ +
+        s""""amount_str": "$amt", "price_str": "$price", "id": $id, """ +
+        s""""order_type": $ot}}""")
+    // order 10: created, partly filled, changed in price, deleted; 11
+    // rests with sub-precision noise; 10 on a second pair; equal
+    // microtimestamps across orders
+    val orders = graft.sources.BitstampFeed.liveOrders(Seq(
+        of(1, 1L, "order_created", 1000000L, "2.0", "7989", 10L, 0),
+        of(1, 2L, "order_changed", 2000000L, "1.0", "7989", 10L, 0),
+        of(1, 3L, "order_created", 2000000L, "1.000000004", "7995.004", 11L, 1),
+        of(1, 4L, "order_changed", 2500000L, "1.0", "7990", 10L, 0),
+        of(1, 5L, "order_changed", 2600000L, "0.4", "7995.0049", 11L, 1),
+        of(1, 6L, "order_deleted", 3000000L, "0.5", "7990", 10L, 0),
+        of(2, 7L, "order_created", 1500000L, "3.0", "101.5", 10L, 1),
+        of(2, 8L, "order_changed", 2500000L, "2.0", "101.5", 10L, 1))
+      .toDF("pair_id", "local_timestamp", "message"))
+      .localCheckpoint(false)
+    // the window builder the kernel replaced, inlined verbatim
+    val wOrd = Window.partitionBy("pair_id", "order_id")
+      .orderBy("microtimestamp", "local_timestamp")
+    val evt = orders
+      .withColumn("price",
+        graft.market.Dimensions.roundPrice(col("pair_id"), col("price")))
+      .withColumn("amount",
+        graft.market.Dimensions.roundAmount(col("pair_id"), col("amount")))
+      .withColumn("del_flag",
+        when(col("event") === "order_deleted", 1).otherwise(0))
+      .withColumn("event_no", row_number().over(wOrd))
+      .withColumn("prev_amount", lag("amount", 1).over(wOrd))
+      .withColumn("lead_ts", lead("microtimestamp", 1).over(wOrd))
+      .withColumn("prev_price", lag("price", 1).over(wOrd))
+      .withColumn("price_chg",
+        when(col("prev_price").isNull || col("price") =!= col("prev_price"), 1)
+          .otherwise(0))
+      .withColumn("price_group",
+        sum("price_chg").over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
+    val wChain = Window.partitionBy("pair_id", "order_id", "price_group")
+    val reference = evt.select(
+      col("microtimestamp"),
+      col("order_id"),
+      col("event_no"),
+      col("side"),
+      col("price"),
+      col("amount"),
+      when(col("prev_amount") > col("amount"),
+        col("prev_amount") - col("amount")).as("fill"),
+      when(col("del_flag") === 1, col("microtimestamp"))
+        .otherwise(coalesce(col("lead_ts"),
+          lit(graft.market.Level3Source.AliveMicros)))
+        .as("next_microtimestamp"),
+      (col("del_flag") === 1).as("is_deleted"),
+      min("microtimestamp").over(wChain).as("price_microtimestamp"),
+      min("event_no").over(wChain).as("price_event_no"),
+      col("pair_id"),
+      lit(2).as("exchange_id"),
+      col("local_timestamp").as("event_id"))
+    val got = graft.sources.BitstampFeed.level3FromLiveOrders(orders)
+    assertSameRows(reference, got)
+    val o10 = got.filter(col("pair_id") === 1 && col("order_id") === 10L)
+      .orderBy("event_no").select("price_event_no", "is_deleted")
+      .as[(Int, Boolean)].collect().toSeq
+    assert(o10 == Seq((1, false), (1, false), (3, false), (3, true)))
+  }
+
+  /** (ShuffleExchangeExec count, SortExec count) on the single-child
+    * spine below the topmost WindowExec of `plan`: the shuffles and
+    * sorts its window passes pay for. */
+  private def windowSpine(plan: SparkPlan): (Int, Int) = {
+    val top = plan.collectFirst { case w: WindowExec => w }
+    assert(top.isDefined, s"no window in\n$plan")
+    val spine = Iterator.iterate[SparkPlan](top.get)(_.children.head)
+      .takeWhile(_.children.size == 1).toList
+    (spine.count(_.isInstanceOf[ShuffleExchangeExec]),
+      spine.count(_.isInstanceOf[SortExec]))
+  }
+
+  test("every level3 builder pays at most one exchange and one sort") {
+    import spark.implicits._
+    import graft.market.Level3Source
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // continueBuild's rows are checkpointed inside the builder: the
+    // plan under its one localCheckpoint (the one whose output carries
+    // the correction flag) comes from the action listener
+    val checkpointed = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (funcName == "localCheckpoint" &&
+            qe.executedPlan.output.exists(_.name == "corrects"))
+          checkpointed.put(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    try {
+      val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
+      val shapes = Seq(
+        "level3" -> Level3Source.level3(events).queryExecution.executedPlan,
+        "level3FromRaw" -> graft.sources.BitfinexFeed.level3FromRaw(
+          graft.sources.BitfinexFeed.rawBookEvents(bitfinexRaw)
+            .localCheckpoint(true)).queryExecution.executedPlan,
+        "level3FromLiveOrders" -> graft.sources.BitstampFeed
+          .level3FromLiveOrders(graft.sources.BitstampFeed.liveOrders(Seq(
+            (1, 1L, """{"event": "order_created", "channel": "live_orders_btcusd", """ +
+              """"data": {"microtimestamp": "1000000", "datetime": "1", """ +
+              """"amount_str": "1.0", "price_str": "7989", "id": 10, """ +
+              """"order_type": 0}}"""))
+            .toDF("pair_id", "local_timestamp", "message")).localCheckpoint(true))
+          .queryExecution.executedPlan)
+      val cut = Oracles.SnapshotMicros
+      val state = Level3Source.openState(Level3Source.level3(
+          events.filter(tsMicros(col("ts")) <= cut))
+        .join(events.select(col("event_id").as("u_eid"), col("user_id")),
+          col("event_id") === col("u_eid"))
+        .drop("u_eid")).localCheckpoint(true)
+      spark.listenerManager.register(listener)
+      Level3Source.continueBuild(events.filter(tsMicros(col("ts")) > cut), state)
+      val continued = checkpointed.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(continued != null, "continueBuild ran no localCheckpoint")
+      (shapes :+ ("continueBuild" -> continued)).foreach { case (name, plan) =>
+        val (exchanges, sorts) = windowSpine(plan)
+        assert(exchanges <= 1 && sorts == 1,
+          s"$name: $exchanges exchanges, $sorts sorts under its windows\n$plan")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 }
